@@ -58,6 +58,11 @@ import org.apache.spark.sql.SparkSession
   *    structural regression that hides behind warm-run reuse (the
   *    round-12 q_embed_mrl_eval case: 6.9 s cold vs 1.0 s warm)
   *    moves this number even when the min looks healthy.
+  *
+  * Base tables and layouts are resolved once per session (`Tables.read`),
+  * so in shared mode the first trial that touches a table the warmups
+  * did not also carries that table's one-time resolution (file listing
+  * and schema inference); later trials reuse it.
   */
 object Bench {
 

@@ -7,18 +7,70 @@ import org.apache.spark.sql.types.DecimalType
 /** Table registry for the driver-provided Parquet corpus (TESTDATA.md).
   *
   * Every operator in this library reads through here so that the scan
-  * layer stays uniform: one `spark.read.parquet` per table, letting
+  * layer stays uniform: each table is one parquet relation, letting
   * Catalyst push filters/projections into the Parquet scan. At cluster
   * scale the same entry point is where partition pruning / bucketing
   * metadata would attach; nothing downstream would change.
+  *
+  * Relations are resolved once per session ([[read]]), not once per
+  * query construction.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** A resolved relation: the session it is bound to, the format it was
+    * read with, and the path's modification time when it was resolved.
+    */
+  private final case class Resolved(session: SparkSession, format: String,
+      mtime: Long, df: DataFrame)
+
+  /** One slot per path, so at most one session is held per path. */
+  private val resolved =
+    new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
+
+  /** The relation of `path` read as `format`, memoized per (session,
+    * path). Resolving a path is a file listing plus a schema-inference
+    * job over the footers (past 32 paths the listing is a distributed
+    * job too) — paid here once instead of at every query construction.
+    * Only source METADATA is reused: the schema and the file index.
+    * Every query still scans the files.
+    *
+    * An entry is served only to the session that resolved it, and only
+    * while the path's modification time (one `getFileStatus`, no job)
+    * is unchanged: a rewritten path is re-resolved rather than served
+    * from a stale file index. A different session gets its own
+    * relation, which replaces the slot. Writers that rebuild a path in
+    * place call [[forget]].
+    */
+  def read(s: SparkSession, path: String, format: String): DataFrame = {
+    val mtime = modTime(s, path)
+    resolved.compute(path, (_, c) =>
+      if (c != null && (c.session eq s) && c.format == format &&
+          c.mtime == mtime && !s.sparkContext.isStopped) c
+      else Resolved(s, format, mtime, s.read.format(format).load(path))
+    ).df
+  }
+
+  def parquet(s: SparkSession, path: String): DataFrame =
+    read(s, path, "parquet")
+
+  /** Drop the memoized relation of `path` (its files were rebuilt). */
+  private[graft] def forget(path: String): Unit = resolved.remove(path)
+
+  /** Modification time of `path`, or -1 when it does not exist (the
+    * read that follows then fails with Spark's own error).
+    */
+  private def modTime(s: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    try p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    catch { case _: java.io.FileNotFoundException => -1L }
+  }
+
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String)     = t(s, d, "region")
   def nation(s: SparkSession, d: String)     = t(s, d, "nation")

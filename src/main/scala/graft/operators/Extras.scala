@@ -42,24 +42,11 @@ object Extras {
     * directory. Shared by q_binary_source and the cross-modal join
     * (media.Multimodal) — in production these files are the
     * downloaded image set. Single-process guard, same contract as
-    * the streaming replay fixture (Streams.scala).
-    *
-    * The RESOLVED relation is memoized per (session, dir): this
-    * fixture's 200 partition directories sit past Spark's 32-path
-    * parallel-discovery threshold, so every bare `load()` launched a
-    * full 200-task distributed LISTING job before a single byte was
-    * scanned — per query construction, i.e. per bench trial (measured:
-    * 200 of q_crossmodal_join's 233 tasks/trial were this job). A
-    * catalog would cache exactly this (the session partition-file
-    * cache / a manifest-backed table, guide §6); the memo is the
-    * path-API analog. Only source METADATA (the plan with its file
-    * index: names/sizes of the immutable fixture files) is reused —
-    * every query still reads every payload byte through the scan, and
-    * the memo is invalidated when a different session asks.
+    * the streaming replay fixture (Streams.scala). The resolved
+    * relation comes from the session's relation memo (`Tables.read`):
+    * the fixture's 200 partition directories make each fresh resolve
+    * a distributed listing job.
     */
-  private val binFixRelation =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
-
   private[graft] def binaryFixture(s: SparkSession, d: String): DataFrame = {
     val out = s"/tmp/graft_binfix_${Tables.cacheKey(d)}"
     val marker = new java.io.File(out, "_BUILT")
@@ -71,10 +58,7 @@ object Extras {
         marker.createNewFile()
       }
     }
-    binFixRelation.compute(out, (_, cached) =>
-      if (cached != null && (cached._1 eq s) && !s.sparkContext.isStopped) cached
-      else (s, s.read.format("binaryFile").load(out))
-    )._2
+    Tables.read(s, out, "binaryFile")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -24,11 +24,6 @@ import org.apache.spark.sql.functions._
   */
 object Layouts {
 
-  /** One-time bucketed write of orders + lineitem on the join key.
-    * Tables land in the session's default warehouse (a static conf
-    * that can't be changed post-session); the per-sf suffix keeps
-    * scale factors from colliding.
-    */
   /** Per-sf suffix for table/dir names: the full path sanitized (no
     * 32-bit-hash collisions); dots stripped too — they'd read as a
     * schema separator in a table identifier.
@@ -43,35 +38,11 @@ object Layouts {
     * derived tables the dedup/ingest pipelines share (shingle index,
     * near-dup pair set, parsed events): at 100 TB these are ingest-time
     * layouts written once and queried many times, exactly like the
-    * bucketed tables above — not session caches. A half-written dir
-    * (no `_SUCCESS`, e.g. a killed build) is cleared and rebuilt.
+    * bucketed tables (`ensureBucketed`) — not session caches. A
+    * half-written dir (no `_SUCCESS`, e.g. a killed build) is cleared
+    * and rebuilt. Re-attach goes through the session's relation memo
+    * (`Tables.parquet`); a rebuild invalidates its entry.
     */
-  /** Resolved relations of the write-once layouts, memoized per
-    * (session, path) — the re-attach half of the contract above made
-    * cheap. A bare `s.read.parquet(dir)` re-resolves the relation on
-    * EVERY call: a schema-inference footer job plus a file listing
-    * that, past Spark's 32-path parallel-discovery threshold, is a
-    * full distributed job (this warehouse's partitioned layouts:
-    * tool_shards 70 dirs, fragmented 65, compacted/rl_shards 38,
-    * mm_shards 36, train_shards 34 — one listing job per consumer
-    * query per bench trial). A catalog table caches exactly this
-    * (the session partition-file cache, guide §6); this memo is the
-    * path-API analog. Only source METADATA is reused — every query
-    * still scans the files — and the layouts are immutable once
-    * `_SUCCESS` exists (vacuum withholds physical deletes; appends
-    * go to fresh dirs; PersistenceSpec pins the no-rewrite contract),
-    * so the cached index can never go stale within a process. A
-    * different session is handed its own fresh relation.
-    */
-  private val attached =
-    new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
-
-  private def attach(s: SparkSession, path: String): DataFrame =
-    attached.compute(path, (_, cached) =>
-      if (cached != null && (cached._1 eq s) && !s.sparkContext.isStopped) cached
-      else (s, s.read.parquet(path))
-    )._2
-
   private[graft] def ensureLayout(s: SparkSession, d: String, name: String,
       partitionCols: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
     val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
@@ -86,15 +57,20 @@ object Layouts {
         val w = build.write.mode("overwrite")
         (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
           .parquet(loc.toString)
-        attached.remove(loc.toString) // a rebuild invalidates any memo
+        Tables.forget(loc.toString)
       }
     }
-    attach(s, loc.toString)
+    Tables.parquet(s, loc.toString)
   }
 
+  /** One-time bucketed write of orders + lineitem on the join key.
+    * Tables land in the session's default warehouse (a static conf
+    * that can't be changed post-session); the per-sf suffix keeps
+    * scale factors from colliding.
+    */
   private def ensureBucketed(s: SparkSession, d: String): Unit = synchronized {
     val suffix = sfSuffix(d)
-    def writeBucketed(name: String, df: DataFrame, key: String): Unit =
+    def writeBucketed(name: String, df: => DataFrame, key: String): Unit =
       if (!s.catalog.tableExists(name)) {
         // files may survive a previous session while the in-memory
         // catalog forgot the table: re-attach them as an external

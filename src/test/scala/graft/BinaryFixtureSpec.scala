@@ -1,39 +1,55 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Pins the binary-fixture relation memo (r18): the fixture's 200
+/** Pins the session relation memo (`Tables.read`) that serves base
+  * tables, write-once layouts and the binary fixture. The fixture's 200
   * partition directories are past Spark's 32-path parallel-discovery
-  * threshold, so a bare `load()` per query construction launched a
-  * 200-task listing job per bench trial. The memo reuses the resolved
-  * relation (source metadata only) within a session — these tests pin
-  * the reuse, the session-identity invalidation, and that the served
+  * threshold, so a bare `load()` per query construction launches a
+  * 200-task listing job; a bare base-table read is a schema-inference
+  * job. The memo reuses the resolved relation (source metadata only)
+  * within a session — these tests pin the reuse, the session-identity
+  * invalidation, the modification-time guard, and that the served
   * relation still reads the real bytes.
   */
 class BinaryFixtureSpec extends SparkSpec {
 
-  test("binaryFixture memoizes the resolved relation within a session") {
-    val a = graft.operators.Extras.binaryFixture(spark, sf)
-    val b = graft.operators.Extras.binaryFixture(spark, sf)
-    assert(a eq b, "same session must reuse the resolved relation " +
-      "(no per-construction listing job)")
-  }
+  // the same contract for both non-layout memo clients: the binary
+  // fixture and a base table (label, resolve, row count)
+  for ((label, resolve, rows) <- Seq[(String, SparkSession => DataFrame, Long)](
+      ("binaryFixture", graft.operators.Extras.binaryFixture(_, sf), 200L),
+      ("Tables.t", Tables.t(_, sf, "region"), 5L))) {
 
-  test("binaryFixture hands a different session its own fresh relation") {
-    val s2 = spark.newSession()
-    val a = graft.operators.Extras.binaryFixture(spark, sf)
-    val b = graft.operators.Extras.binaryFixture(s2, sf)
-    assert(!(a eq b), "a new session must not be served a relation " +
-      "bound to another session")
-    assert(b.sparkSession eq s2)
-    // and the original session gets a working relation again afterwards
-    val c = graft.operators.Extras.binaryFixture(spark, sf)
-    assert(c.sparkSession eq spark)
-    assert(c.count() == 200)
+    test(s"$label memoizes the resolved relation within a session") {
+      assert(resolve(spark) eq resolve(spark), "same session must reuse " +
+        "the resolved relation (no per-construction listing or " +
+        "schema-inference job)")
+    }
+
+    test(s"$label hands a different session its own fresh relation") {
+      val s2 = spark.newSession()
+      val a = resolve(spark)
+      val b = resolve(s2)
+      assert(!(a eq b), "a new session must not be served a relation " +
+        "bound to another session")
+      assert(b.sparkSession eq s2)
+      // and the original session gets a working relation again afterwards
+      val c = resolve(spark)
+      assert(c.sparkSession eq spark)
+      assert(c.count() == rows)
+    }
   }
 
   test("ensureLayout memoizes re-attach within a session and invalidates on rebuild") {
     import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val wh = Paths.get(new java.net.URI(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    val loc = wh.resolve(s"memo_probe_${sources.Layouts.sfSuffix(sf)}")
+    def delete(): Unit = if (Files.exists(loc))
+      Files.walk(loc).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    delete() // start from no layout, whatever an earlier run left behind
     var builds = 0
     def layout() = graft.sources.Layouts.ensureLayout(spark, sf, "memo_probe") {
       builds += 1
@@ -41,7 +57,7 @@ class BinaryFixtureSpec extends SparkSpec {
     }
     val a = layout(); val b = layout()
     assert(a eq b, "same session must reuse the attached relation")
-    assert(builds <= 1, "re-attach must never rebuild")
+    assert(builds == 1, "re-attach must never rebuild")
     assert(b.count() == 5)
     // a new session is handed its own relation bound to that session
     val s2 = spark.newSession()
@@ -50,11 +66,7 @@ class BinaryFixtureSpec extends SparkSpec {
     }
     assert(!(c eq b) && (c.sparkSession eq s2))
     // deleting the layout forces a rebuild, which must invalidate the memo
-    val wh = Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val loc = wh.resolve(s"memo_probe_${sources.Layouts.sfSuffix(sf)}")
-    import scala.jdk.CollectionConverters._
-    Files.walk(loc).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    delete()
     val d0 = layout()
     assert(!(d0 eq a), "a rebuild must not serve the stale pre-delete relation")
     assert(builds == 2 && d0.count() == 5)
@@ -73,5 +85,23 @@ class BinaryFixtureSpec extends SparkSpec {
       .filter(col("got_md5") =!= col("want_md5")).count()
     assert(bad == 0)
     assert(got.count() == 200)
+  }
+
+  test("Tables.t re-resolves a table rewritten between two calls") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_memo_probe")
+    try {
+      val path = dir.resolve("probe.parquet").toString
+      spark.range(3).toDF("k").write.mode("overwrite").parquet(path)
+      val a = Tables.t(spark, dir.toString, "probe")
+      assert(a.agg(sum(col("k"))).head().getLong(0) == 3L)
+      spark.range(10, 15).toDF("k").write.mode("overwrite").parquet(path)
+      val b = Tables.t(spark, dir.toString, "probe")
+      assert(!(a eq b), "a rewritten path must not be served its stale file index")
+      assert(b.agg(sum(col("k"))).head().getLong(0) == 60L)
+    } finally {
+      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    }
   }
 }
