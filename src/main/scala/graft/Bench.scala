@@ -91,13 +91,7 @@ object Bench {
     else "core"
 
   private def buildSession(cpus: String): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.create(s"local[$cpus]", cpus.toInt)
     s.sparkContext.setLogLevel("WARN")
     s
   }

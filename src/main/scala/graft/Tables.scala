@@ -135,6 +135,17 @@ object Tables {
     */
   def cacheKey(d: String): String =
     new java.io.File(d).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
+
+  /** Delete `dir` and everything under it (children first; symlinks are
+    * removed, never followed). A missing `dir` is a no-op.
+    */
+  private[graft] def deleteTree(dir: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(dir)) {
+      import scala.jdk.CollectionConverters._
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
+      finally walk.close()
+    }
 }
 
 /** Exact-arithmetic helpers for oracle parity.

@@ -345,7 +345,7 @@ object Dedup {
     }
 
   /** Blocked fuzzy-match candidates with their edit distance, BEFORE
-    * the edit-budget filter (exposed for ScaleProbe): prefix-32
+    * the edit-budget filter (exposed for `Tools scale`): prefix-32
     * blocking, hot blocks (>64 docs) excluded before the self-join.
     *
     * Shaped like the KNN thin index after a 9.9 s sf0.1 bench of the
@@ -965,7 +965,7 @@ object Dedup {
     // O(n²/k), and k tracks ⌈n/128⌉ above a 16-cell floor
     // (Similarity.adaptiveIvfK — cells stay ~constant-sized), so the
     // candidate volume per vector is flat at 100 TB while a global
-    // pairwise pass is quadratic; ScaleProbe measures the exponent at
+    // pairwise pass is quadratic; `Tools scale` measures the exponent at
     // the floor vs under the adaptive law. Differs from
     // q_dedup_embed (sign-LSH bands: probabilistic buckets, global
     // reach) in exactly the way SemDeDup differs from MinHash-style

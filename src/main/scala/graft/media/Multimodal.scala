@@ -736,7 +736,7 @@ object Multimodal {
     // placement) already sits behind mmKeptImages' own thin
     // checkpoint, so the three plan replays of `costs` re-run only
     // cheap arithmetic over checkpointed inputs — a barrier here
-    // measured MORE cpu (0.41 → 0.65 s, WorkProbe) from the blocking
+    // measured MORE cpu (0.41 → 0.65 s, `Tools work`) from the blocking
     // materialization it adds.
     val costs = docs.join(counts, Seq("doc_id"), "left")
       .select(col("doc_id"), col("source"),

@@ -141,7 +141,7 @@ object Graph {
           col("b")).otherwise(col("a")).as("dst"))
       .localCheckpoint()
 
-  /** (edges, oriented wedges) — the ScaleProbe readout for the
+  /** (edges, oriented wedges) — `Tools scale` readout for the
     * O(|E|^1.5) wedge bound the orientation provides.
     */
   private[graft] def wedgeStats(s: SparkSession, d: String): (Long, Long) = {
@@ -155,7 +155,7 @@ object Graph {
   }
 
   /** (per-iteration equi-join rows, shuffled rank-table rows) for the
-    * PageRank family — the ScaleProbe readout certifying the "only
+    * PageRank family — `Tools scale` readout certifying the "only
     * the thin rank table shuffles" claim: each damping round streams
     * the pre-partitioned edge side exchange-free, joins |E| rows, and
     * exchanges only the map-combined per-destination sums (≤ nodes
@@ -179,7 +179,7 @@ object Graph {
   /** Link-prediction candidate rows (a, b) from the wedge join over a
     * symmetric (u, v) adjacency, each shared-neighbor witness list
     * capped at `cap` smallest-id members (cap ≤ 0 → uncapped). The
-    * ONE construction behind q_graph_linkpred and the ScaleProbe
+    * ONE construction behind q_graph_linkpred and `Tools scale`
     * skew fixture — the probe measures exactly the plan that ships.
     */
   private[graft] def wedgeCandidates(adj: DataFrame, cap: Int): DataFrame = {
@@ -212,7 +212,7 @@ object Graph {
       .head.getLong(0)
   }
 
-  /** Deliberately skewed synthetic adjacency for the ScaleProbe: n
+  /** Deliberately skewed synthetic adjacency for `Tools scale`: n
     * nodes in a ring plus a modular chord (≈2n base edges, max base
     * degree ≤ 6) and ONE hub (node 0) touching 2n/9 spokes — i.e. a
     * single node on ~10 % of all edges, the power-law worst case the
@@ -296,7 +296,7 @@ object Graph {
     // the Jaccard denominator stay UNCAPPED (true |Γ|). Existing
     // edges drop via a thin LEFT ANTI on 8-byte pairs; per-mille
     // integer scores, distributed top-50 via TakeOrderedAndProject.
-    // ScaleProbe's skewed-hub fixture measures the bound. Fully
+    // the `Tools scale` skewed-hub fixture measures the bound. Fully
     // oracled.
     "q_graph_linkpred" -> ((s, d) => {
       val e = coEdges(s, d)

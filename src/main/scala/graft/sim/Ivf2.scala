@@ -34,7 +34,7 @@ import graft.functions.VectorFunctions
   *
   * Rows-only by contract (k-means lineage); Ivf2Spec pins the fine
   * assignment to a plain-Scala argmin replay, the kf occupancy law,
-  * and recall vs brute force; ScaleProbe measures candidate volume.
+  * and recall vs brute force; `Tools scale` measures candidate volume.
   */
 object Ivf2 {
 
@@ -113,7 +113,7 @@ object Ivf2 {
     }
 
   /** The fine-quantizer fit at an explicit occupancy target — the
-    * layout build uses FineCellTarget; ScaleProbe calls with a small
+    * layout build uses FineCellTarget; `Tools scale` calls with a small
     * target to measure the ADAPTIVE regime (kf off its floor) at SFs
     * where the canonical target leaves kf floored.
     */
@@ -162,7 +162,7 @@ object Ivf2 {
         .toDF("cell", "fine", "fcentroid")
     }
 
-  /** ScaleProbe readout: the LARGEST (cell, fine) stratum under a
+  /** `Tools scale` readout: the LARGEST (cell, fine) stratum under a
     * given occupancy target — assignment computed live from the
     * probe-target fit (no layout write). Measures the adaptive-regime
     * occupancy bound the two-level sampler's windows rely on.
@@ -234,7 +234,7 @@ object Ivf2 {
   }
 
   /** Probed candidate (qid, nid) pairs before scoring — exposed for
-    * ScaleProbe's candidate-volume measurement.
+    * the `Tools scale` candidate-volume measurement.
     */
   private[graft] def ivf2Candidates(s: SparkSession, d: String): DataFrame =
     broadcast(ivf2Probes(s, d).select(col("qid"), col("cell"), col("fine")))

@@ -149,7 +149,7 @@ object Pca {
     * everything projection needs (pc_k(x) = x·v_k − μ·v_k) without
     * re-reading the corpus. All values rounded to 6 decimals.
     */
-  /** The single-pass moment aggregate (exposed for ScaleProbe: its
+  /** The single-pass moment aggregate (exposed for `Tools scale`: its
     * wall should grow ~linearly in corpus size while its output stays
     * a constant 2145 doubles). */
   private[graft] def momentPass(s: SparkSession, d: String): Array[Double] = {

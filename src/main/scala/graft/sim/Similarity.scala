@@ -124,7 +124,7 @@ object Similarity {
       .orderBy(col("qid"), col("rk"))
   }
 
-  /** ScaleProbe-only: the hybrid dense leg's candidate count at an
+  /** `Tools scale` only: the hybrid dense leg's candidate count at an
     * EXPLICIT cell count (floor lifted) — the canonical written index
     * sits at the 16-cell floor through sf0.1, so its reading is
     * floor-regime by construction (cells grow with n ⇒ exp ~1, the
@@ -237,7 +237,7 @@ object Similarity {
 
   /** KMeans fit-on-a-bounded-sample + distributed label pass at an
     * explicit cell count — the layout build body, also exposed to
-    * ScaleProbe so the cell-count knob can be measured at any k
+    * `Tools scale` so the cell-count knob can be measured at any k
     * without touching the canonical written index.
     */
   private[graft] def ivfAssign(s: SparkSession, d: String, k: Int): DataFrame =
@@ -264,7 +264,7 @@ object Similarity {
 
   /** Within-cell candidate-pair set at an arbitrary cell count
     * (probe-only; q_dedup_semantic reads the canonical layout). The
-    * thin self-join ScaleProbe counts to measure how cell count
+    * thin self-join `Tools scale` counts to measure how cell count
     * controls SemDeDup candidate volume.
     */
   private[graft] def semanticCandidates(s: SparkSession, d: String,
@@ -1198,7 +1198,7 @@ object Similarity {
     // recall long before latency moves). Composes the two registered
     // plans and joins their bounded (qid, nid) lists — the eval
     // itself costs two |queries|·k thin joins regardless of corpus
-    // size; the measured quantity is the same one RecallProbe pins
+    // size; the measured quantity is the same one `Tools recall` pins
     // offline, here surfaced as a pipeline operator. FULLY ORACLED
     // (round 13: both the exact and LSH sides generate in SQL, so the
     // monitoring metric itself is hash-checked); the spec addition-

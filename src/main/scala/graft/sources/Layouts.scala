@@ -49,11 +49,7 @@ object Layouts {
     val loc = java.nio.file.Paths.get(wh, s"${name}_${sfSuffix(d)}")
     synchronized {
       if (!java.nio.file.Files.exists(loc.resolve("_SUCCESS"))) {
-        if (java.nio.file.Files.exists(loc)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.delete)
-        }
+        Tables.deleteTree(loc)
         val w = build.write.mode("overwrite")
         (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
           .parquet(loc.toString)
@@ -82,11 +78,7 @@ object Layouts {
                    |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
                    |LOCATION '$loc'""".stripMargin)
         } else {
-          if (java.nio.file.Files.exists(loc)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(loc).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.delete)
-          }
+          Tables.deleteTree(loc)
           // external (explicit path): dropping the catalog entry never
           // deletes the data — the layout is a write-once warehouse
           // that later sessions re-attach to (branch above)
@@ -120,11 +112,7 @@ object Layouts {
     val dir = java.nio.file.Paths.get(wh, s"timetravel_${sfSuffix(d)}")
     synchronized {
       if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
-        if (java.nio.file.Files.exists(dir)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.delete)
-        }
+        Tables.deleteTree(dir)
         val base = Tables.orders(s, d)
           .withColumn("o_year", year(col("o_orderdate")))
         base.write.partitionBy("o_year").parquet(s"$dir/v0")
@@ -180,11 +168,7 @@ object Layouts {
     val dir = java.nio.file.Paths.get(wh, s"ttclone_${sfSuffix(d)}")
     synchronized {
       if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
-        if (java.nio.file.Files.exists(dir)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.delete)
-        }
+        Tables.deleteTree(dir)
         val log = s.read.parquet(s"$src/_log").filter(col("ver") <= 1L)
         log.filter(col("action") === "add").select("path")
           .except(log.filter(col("action") === "remove").select("path"))

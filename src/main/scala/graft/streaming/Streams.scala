@@ -80,41 +80,20 @@ object Streams {
 
   /** Documents replayed as four hash-sliced parquet files consumed
     * one per micro-batch — the ingest-stream fixture for the
-    * incremental datasheet (same one-time build discipline as
-    * `eventsStreamMulti` below). The 4-way slice is `pmod(xxhash64
-    * (doc_id), 4)` — the same hash-shard discipline as
+    * incremental datasheet, built once by [[ensureBatchFixture]]. The
+    * 4-way slice is `pmod(xxhash64(doc_id), 4)` — the same hash-shard discipline as
     * `datasheetPartials`' batch column — NOT an ntile over a global
     * Window.orderBy, which would funnel the whole table through one
     * task in the fixture build. Datasheet merging is associative, so
     * batch composition cannot move any published metric.
     */
   private def docsStreamMulti(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val schema = Tables.t(s, d, "documents").schema
-    val dir = Paths.get("/tmp", "graft_docstream4h_" + Tables.cacheKey(d))
-    if (!Files.exists(dir.resolve("_READY"))) synchronized {
-      if (!Files.exists(dir.resolve("_READY"))) {
-        if (Files.exists(dir)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        }
-        Files.createDirectories(dir)
-        val sliced = Tables.t(s, d, "documents")
-          .withColumn("__slice", (pmod(xxhash64(col("doc_id")), lit(4)) + 1).cast("int"))
-        (1 to 4).foreach { i =>
-          val tmp = dir.resolve(s"__build_$i")
-          sliced.filter(col("__slice") === i).drop("__slice")
-            .coalesce(1).write.parquet(tmp.toString)
-          import scala.jdk.CollectionConverters._
-          val part = Files.list(tmp).iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          Files.move(part, dir.resolve(f"batch_$i%02d.parquet"))
-          Files.setLastModifiedTime(dir.resolve(f"batch_$i%02d.parquet"),
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-          Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        }
-        Files.createFile(dir.resolve("_READY"))
-      }
+    val dir = java.nio.file.Paths.get("/tmp", "graft_docstream4h_" + Tables.cacheKey(d))
+    ensureBatchFixture(dir) {
+      val sliced = Tables.t(s, d, "documents")
+        .withColumn("__slice", (pmod(xxhash64(col("doc_id")), lit(4)) + 1).cast("int"))
+      (1 to 4).map(i => i -> sliced.filter(col("__slice") === i).drop("__slice"))
     }
     s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
       .parquet(dir.toString)
@@ -135,9 +114,7 @@ object Streams {
     import scala.jdk.CollectionConverters._
     if (!Files.exists(dir.resolve("_READY"))) synchronized {
       if (!Files.exists(dir.resolve("_READY"))) {
-        if (Files.exists(dir)) {
-          Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        }
+        Tables.deleteTree(dir)
         Files.createDirectories(dir)
         batches.foreach { case (i, df) =>
           val tmp = dir.resolve(s"__build_$i")
@@ -148,7 +125,7 @@ object Streams {
           // distinct mtimes: the file-stream source picks oldest first
           Files.setLastModifiedTime(dir.resolve(f"batch_$i%02d.parquet"),
             java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-          Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+          Tables.deleteTree(tmp)
         }
         Files.createFile(dir.resolve("_READY"))
       }
@@ -176,7 +153,7 @@ object Streams {
     * window as it seals mid-stream, instead of one batch that only
     * flushes at end-of-stream.
     */
-  private def eventsStreamMulti(s: SparkSession, d: String): DataFrame = {
+  private[graft] def eventsStreamMulti(s: SparkSession, d: String): DataFrame = {
     import java.nio.file.Paths
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.t(s, d, "events").schema // raw nanos or µs NTZ
@@ -288,13 +265,8 @@ object Streams {
       "/dev/shm" else System.getProperty("java.io.tmpdir")
 
   private def rmTree(dir: String): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(dir)
-      if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.walk(p).iterator().asScala.toSeq
-          .reverse.foreach(java.nio.file.Files.delete)
-    } catch { case _: Throwable => () }
+    try Tables.deleteTree(java.nio.file.Paths.get(dir))
+    catch { case _: Throwable => () }
 
   private def drain(s: SparkSession, df: DataFrame, mode: String): DataFrame = {
     val key = "spark.sql.shuffle.partitions"
@@ -1217,7 +1189,7 @@ object Streams {
     // join), but two replays share one exchange at runtime, so a thin
     // barrier here only trades a ~1.4 MB exchange replay for a
     // blocking materialization — measured CPU −5% but wall +0.1–0.6 s
-    // (WorkProbe: shuffle 4.45 → 3.07 MB, cpu 1.15 → 1.09 s, bench
+    // (`Tools work`: shuffle 4.45 → 3.07 MB, cpu 1.15 → 1.09 s, bench
     // min 1.15 → 1.29 s). The mm-chain barrier precedent does not
     // transfer: here the replayed subtree is cheap and pipelines.
     val eps = episodeStepRows(s, d)

@@ -367,7 +367,7 @@ object Corpus {
   }
 
   /** The cross-corpus MinHash-band candidate set behind
-    * q_decontaminate_fuzzy, exposed for ScaleProbe: (doc_id, bdoc)
+    * q_decontaminate_fuzzy, exposed for `Tools scale`: (doc_id, bdoc)
     * pairs where any of the 4 banded signatures collide. Growth with
     * corpus size should be ~linear (true near-dups are one-per-bench-
     * doc, random band collisions are ~0) — measured, not asserted.
@@ -724,7 +724,7 @@ object Corpus {
     // fixpoint is the shared write-once label layout (built once per
     // corpus at ingest, amortized across every dedup consumer). The
     // composed wall and per-stage exchange counts are measured at ×50
-    // by graft.PipelineRehearsal (BASELINE.md).
+    // by `Tools rehearse` (BASELINE.md).
     "q_pipeline_export" -> ((s, d) =>
       graft.sources.Layouts.ensureLayout(s, d, "pipeline_shards",
           partitionCols = Seq("shard")) {

@@ -296,7 +296,7 @@ object Quality {
       // trade: one extra PRUNED corpus scan+explode (§8: re-scanning
       // columnar input is cheap, shuffling or storing corpus-sized
       // intermediates is not) for one fewer corpus-sized exchange and
-      // no corpus-sized checkpoint. Measured at sf0.1 (WorkProbe):
+      // no corpus-sized checkpoint. Measured at sf0.1 (`Tools work`):
       // executor CPU 1.59 → 0.78 s/trial, shuffle 4.93 → 0.17 MB,
       // shuffled rows 270k → 11k; bench min 1.61 → 1.30 s isolated.
       // Oracle unchanged.

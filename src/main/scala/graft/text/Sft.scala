@@ -274,7 +274,7 @@ object Sft {
   private[graft] def sftPacked(s: SparkSession, d: String): DataFrame = {
     // thin (ids + integer accounting + 16-byte fp) rows with THREE
     // consumers (both seqPackedOf branches + the join below) — the
-    // q_tool_pack barrier (r18), same shape, same reason (WorkProbe:
+    // q_tool_pack barrier (r18), same shape, same reason (`Tools work`:
     // executor cpu 1.08 → 0.69 s/trial)
     val kept = sftKeptConvs(s, d).localCheckpoint()
     val packed = Corpus.seqPackedOf(kept.select(col("doc_id"),

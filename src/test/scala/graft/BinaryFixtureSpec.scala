@@ -42,13 +42,11 @@ class BinaryFixtureSpec extends SparkSpec {
   }
 
   test("ensureLayout memoizes re-attach within a session and invalidates on rebuild") {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
+    import java.nio.file.Paths
     val wh = Paths.get(new java.net.URI(
       spark.conf.get("spark.sql.warehouse.dir")).getPath)
     val loc = wh.resolve(s"memo_probe_${sources.Layouts.sfSuffix(sf)}")
-    def delete(): Unit = if (Files.exists(loc))
-      Files.walk(loc).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    def delete(): Unit = Tables.deleteTree(loc)
     delete() // start from no layout, whatever an earlier run left behind
     var builds = 0
     def layout() = graft.sources.Layouts.ensureLayout(spark, sf, "memo_probe") {
@@ -88,9 +86,7 @@ class BinaryFixtureSpec extends SparkSpec {
   }
 
   test("Tables.t re-resolves a table rewritten between two calls") {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("graft_memo_probe")
+    val dir = java.nio.file.Files.createTempDirectory("graft_memo_probe")
     try {
       val path = dir.resolve("probe.parquet").toString
       spark.range(3).toDF("k").write.mode("overwrite").parquet(path)
@@ -100,8 +96,6 @@ class BinaryFixtureSpec extends SparkSpec {
       val b = Tables.t(spark, dir.toString, "probe")
       assert(!(a eq b), "a rewritten path must not be served its stale file index")
       assert(b.agg(sum(col("k"))).head().getLong(0) == 60L)
-    } finally {
-      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
+    } finally Tables.deleteTree(dir)
   }
 }

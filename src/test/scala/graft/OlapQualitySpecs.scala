@@ -731,7 +731,7 @@ class LinkpredSpec extends SparkSpec {
     val uncapped = Graph.wedgeCandidateCount(skew, 0)
     // the closed form Σ C(min(deg, cap), 2) counts exactly what the
     // capped join materializes — certifying the uncapped closed form
-    // the ScaleProbe reports without materializing a quadratic set
+    // `Tools scale` reports without materializing a quadratic set
     assert(capped == Graph.wedgeCandidateCount(skew, cap),
       s"closed form ${Graph.wedgeCandidateCount(skew, cap)} != join $capped")
     // and the cap actually bites: the hub's C(888,2) ≈ 394k collapses

@@ -1271,10 +1271,7 @@ class TransformWithStateSpec extends SparkSpec {
         case Some(p) => sess.conf.set(provKey, p)
         case None => sess.conf.unset(provKey)
       }
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(ckpt)
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq
-        .reverse.foreach(java.nio.file.Files.delete)
+      Tables.deleteTree(java.nio.file.Paths.get(ckpt))
     }
   }
 
@@ -3061,7 +3058,7 @@ class NoveltyOverlapSpec extends SparkSpec {
   }
 }
 
-/** Contract of the second-decade derived corpus (ScaleProbe2): the
+/** Contract of the derived scale corpus (`Tools.ensureScaled`): the
   * fixture must be byte-deterministic (no RNG — a wiped rebuild yields
   * the identical corpus), schema-faithful to the driver tables, exact
   * in its row multiplicity, and isometric per embedding copy (a
@@ -3073,15 +3070,6 @@ class NoveltyOverlapSpec extends SparkSpec {
 class ScaleFixtureSpec extends SparkSpec {
   import org.apache.spark.sql.functions._
 
-  private def wipe(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
-  }
-
   private def checksum(df: org.apache.spark.sql.DataFrame): Long =
     df.select((hash(df.columns.map(col).toIndexedSeq: _*)).cast("long").as("h"))
       .agg(sum(col("h"))).head.getLong(0)
@@ -3089,13 +3077,13 @@ class ScaleFixtureSpec extends SparkSpec {
   test("derived corpus is deterministic, schema-faithful, and copy-isometric") {
     val base = "/root/testdata/sf0.001"
     val factor = 3
-    val dir = s"/tmp/graft_scale${factor}x_${Tables.cacheKey(base)}"
-    wipe(dir)
-    val d1 = ScaleProbe2.ensureScaled(spark, base, factor)
+    val dir = java.nio.file.Paths.get(s"/tmp/graft_scale${factor}x_${Tables.cacheKey(base)}")
+    Tables.deleteTree(dir)
+    val d1 = Tools.ensureScaled(spark, base, factor)
     val docs1 = checksum(spark.read.parquet(s"$d1/documents.parquet"))
     val vecs1 = checksum(spark.read.parquet(s"$d1/embeddings.parquet"))
-    wipe(dir)
-    val d2 = ScaleProbe2.ensureScaled(spark, base, factor)
+    Tables.deleteTree(dir)
+    val d2 = Tools.ensureScaled(spark, base, factor)
     assert(checksum(spark.read.parquet(s"$d2/documents.parquet")) == docs1)
     assert(checksum(spark.read.parquet(s"$d2/embeddings.parquet")) == vecs1)
 

@@ -3,16 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all specs (one JVM-wide session, UTC, AQE on). */
+/** Shared session for all specs: one JVM-wide `GraftSession` (local[4],
+  * UTC, AQE on, graft functions attached).
+  */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.create("local[4]", 4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
