@@ -20,54 +20,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** A resolved relation: the session it is bound to, the format it was
-    * read with, and the path's modification time when it was resolved.
+  /** The relation of `path` read as `format`, memoized per session in
+    * [[SessionResources.memo]] with `path` as its source. Resolving a
+    * path is a file listing plus a schema-inference job over the footers
+    * (past 32 paths the listing is a distributed job too) — paid here
+    * once instead of at every query construction. Only source METADATA
+    * is reused: the schema and the file index. Every query still scans
+    * the files, and a rewritten path is re-resolved.
     */
-  private final case class Resolved(session: SparkSession, format: String,
-      mtime: Long, df: DataFrame)
-
-  /** One slot per path, so at most one session is held per path. */
-  private val resolved =
-    new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
-
-  /** The relation of `path` read as `format`, memoized per (session,
-    * path). Resolving a path is a file listing plus a schema-inference
-    * job over the footers (past 32 paths the listing is a distributed
-    * job too) — paid here once instead of at every query construction.
-    * Only source METADATA is reused: the schema and the file index.
-    * Every query still scans the files.
-    *
-    * An entry is served only to the session that resolved it, and only
-    * while the path's modification time (one `getFileStatus`, no job)
-    * is unchanged: a rewritten path is re-resolved rather than served
-    * from a stale file index. A different session gets its own
-    * relation, which replaces the slot. Writers that rebuild a path in
-    * place call [[forget]].
-    */
-  def read(s: SparkSession, path: String, format: String): DataFrame = {
-    val mtime = modTime(s, path)
-    resolved.compute(path, (_, c) =>
-      if (c != null && (c.session eq s) && c.format == format &&
-          c.mtime == mtime && !s.sparkContext.isStopped) c
-      else Resolved(s, format, mtime, s.read.format(format).load(path))
-    ).df
-  }
+  def read(s: SparkSession, path: String, format: String): DataFrame =
+    SessionResources.memo(s, s"$format:$path", path)(s.read.format(format).load(path))
 
   def parquet(s: SparkSession, path: String): DataFrame =
     read(s, path, "parquet")
-
-  /** Drop the memoized relation of `path` (its files were rebuilt). */
-  private[graft] def forget(path: String): Unit = resolved.remove(path)
-
-  /** Modification time of `path`, or -1 when it does not exist (the
-    * read that follows then fails with Spark's own error).
-    */
-  private def modTime(s: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .getFileStatus(p).getModificationTime
-    catch { case _: java.io.FileNotFoundException => -1L }
-  }
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     parquet(spark, s"$dir/$name.parquet")
@@ -128,13 +93,6 @@ object Tables {
             .getField("k").as("k"),
           from_json(col("props"), MapType(StringType, LongType)).as("m"))
     }
-
-  /** Collision-free key for /tmp cache dirs derived from a data dir:
-    * the full path, sanitized. (A 32-bit hashCode can collide across
-    * sf dirs and silently serve the wrong corpus.)
-    */
-  def cacheKey(d: String): String =
-    new java.io.File(d).getAbsolutePath.replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** Delete `dir` and everything under it (children first; symlinks are
     * removed, never followed). A missing `dir` is a no-op.

@@ -379,8 +379,9 @@ object Tools {
       free(k - 10)
     }
 
-  /** Build (once) the ×`factor` derived corpus of `baseDir` under /tmp
-    * and return its dir. No randomness, so a rebuild is byte-identical.
+  /** Build (once) the ×`factor` derived corpus of `baseDir` as a
+    * warehouse artifact (`SessionResources.artifact`) and return its
+    * dir. No randomness, so a rebuild is byte-identical.
     *
     *  - `documents`: copy k re-keys `doc_id` by k·10^7 and, for k ≥ 1,
     *    drops every m-th word at offset `off` ([[dropPattern]]). Copies
@@ -392,47 +393,39 @@ object Tools {
     *    cosines decorrelate.
     *  - every other table is a symlink to the base table.
     *
-    * `vecsOnly` scales only the embeddings (up to 64 rotations). The
-    * `_SUCCESS` marker is written last; a dir without it is cleared and
-    * rebuilt.
+    * `vecsOnly` scales only the embeddings (up to 64 rotations).
     */
   private[graft] def ensureScaled(s: SparkSession, baseDir: String,
       factor: Int, vecsOnly: Boolean = false): String = {
     require(!vecsOnly || factor <= 64,
       s"vecsOnly factor $factor exceeds the 64 distinct dimension rotations")
     val tag = if (vecsOnly) "xv" else "x"
-    val dir = Paths.get(s"/tmp/graft_scale$factor${tag}_${Tables.cacheKey(baseDir)}")
-    synchronized {
-      if (!Files.exists(dir.resolve("_SUCCESS"))) {
-        Tables.deleteTree(dir)
-        Files.createDirectories(dir)
-        def write(table: String, base: DataFrame)(copy: (DataFrame, Int) => DataFrame): Unit =
-          (base +: (1 until factor).map(copy(base, _))).reduce(_ unionAll _)
-            .repartition(32).write.parquet(s"$dir/$table.parquet")
-        if (!vecsOnly) write("documents", Tables.documents(s, baseDir)
-            .select("doc_id", "text", "lang", "source", "n_chars")) { (docs, k) =>
-          val (m, off) = dropPattern(k)
-          docs.select((col("doc_id") + lit(k * IdStride)).as("doc_id"),
-            array_join(filter(split(col("text"), " "),
-              (_, i) => (i + lit(off)) % m =!= 0), " ").as("text"),
-            col("lang"), col("source"))
-            .withColumn("n_chars", length(col("text")).cast("long"))
-        }
-        write("embeddings", Tables.embeddings(s, baseDir)
-            .select("vec_id", "embedding", "label")) { (vecs, k) =>
-          vecs.select((col("vec_id") + lit(k * IdStride)).as("vec_id"),
-            expr(s"concat(slice(embedding, ${k + 1}, size(embedding) - $k)," +
-              s" slice(embedding, 1, $k))").as("embedding"),
-            col("label"))
-        }
-        Tables.names
-          .filterNot(n => n == "embeddings" || (n == "documents" && !vecsOnly))
-          .foreach(n => Files.createSymbolicLink(
-            dir.resolve(s"$n.parquet"), Paths.get(s"$baseDir/$n.parquet")))
-        Files.createFile(dir.resolve("_SUCCESS"))
+    SessionResources.artifact(s, baseDir, s"scale$factor$tag") { dir =>
+      Files.createDirectories(dir)
+      def write(table: String, base: DataFrame)(copy: (DataFrame, Int) => DataFrame): Unit =
+        (base +: (1 until factor).map(copy(base, _))).reduce(_ unionAll _)
+          .repartition(32).write.parquet(s"$dir/$table.parquet")
+      if (!vecsOnly) write("documents", Tables.documents(s, baseDir)
+          .select("doc_id", "text", "lang", "source", "n_chars")) { (docs, k) =>
+        val (m, off) = dropPattern(k)
+        docs.select((col("doc_id") + lit(k * IdStride)).as("doc_id"),
+          array_join(filter(split(col("text"), " "),
+            (_, i) => (i + lit(off)) % m =!= 0), " ").as("text"),
+          col("lang"), col("source"))
+          .withColumn("n_chars", length(col("text")).cast("long"))
       }
-    }
-    dir.toString
+      write("embeddings", Tables.embeddings(s, baseDir)
+          .select("vec_id", "embedding", "label")) { (vecs, k) =>
+        vecs.select((col("vec_id") + lit(k * IdStride)).as("vec_id"),
+          expr(s"concat(slice(embedding, ${k + 1}, size(embedding) - $k)," +
+            s" slice(embedding, 1, $k))").as("embedding"),
+          col("label"))
+      }
+      Tables.names
+        .filterNot(n => n == "embeddings" || (n == "documents" && !vecsOnly))
+        .foreach(n => Files.createSymbolicLink(
+          dir.resolve(s"$n.parquet"), Paths.get(s"$baseDir/$n.parquet")))
+    }.toString
   }
 
   /** KNN-graph and sign-LSH recall against the brute-force top-5: the
@@ -510,15 +503,14 @@ object Tools {
 
   /** TPC-H Q1 (`q1_pricing_summary`) over lineitem as stored (one row
     * group per table at sf0.1, so one scan task at any core count) and
-    * over a 32-file copy written once under /tmp (32 scan splits). Run
+    * over a 32-file copy written once to the warehouse (32 scan splits). Run
     * at two `SPARK_GRAFT_CPUS` values: the split-able layout's time
     * should follow the core count, the one-row-group layout's should not.
     */
   private def rowGroups(s: SparkSession, d: String): Seq[String] = {
-    val multi = "/tmp/graft_rowgroups32_" + Tables.cacheKey(d)
-    if (!Files.exists(Paths.get(multi, "lineitem.parquet", "_SUCCESS")))
-      Tables.lineitem(s, d).repartition(32).write.mode("overwrite")
-        .parquet(s"$multi/lineitem.parquet")
+    val multi = SessionResources.artifact(s, d, "rowgroups32") { dir =>
+      Tables.lineitem(s, d).repartition(32).write.parquet(s"$dir/lineitem.parquet")
+    }.toString
     val cores = s.sparkContext.defaultParallelism
     Seq("q1 single-row-group" -> d, "q1 32-file layout  " -> multi).map { case (label, dir) =>
       val ts = (1 to 4).map(_ => sec(noop(query(s, "q1_pricing_summary", dir))))
@@ -607,9 +599,8 @@ object Tools {
       def measured(df: => DataFrame) = (exchanges(s, df), sec(noop(df)))
       val nDocs = Tables.documents(s, d).count()
       // write-once layouts: record which ones this run did not have to build
-      val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
       val preexisting = Seq("dedup_cluster_labels", "pipeline_shards").filter(name =>
-        Files.exists(Paths.get(wh, s"${name}_${sources.Layouts.sfSuffix(d)}", "_SUCCESS")))
+        SessionResources.built(SessionResources.artifactDir(s, d, name)))
       // the label layout: the first read pays the build if it was absent
       val labelsFirstSec = sec(dedup.Dedup.clusterLabels(s, d).count())
       val labelsSec = sec(dedup.Dedup.clusterLabels(s, d).count())

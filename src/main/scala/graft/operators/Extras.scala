@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{SessionResources, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,38 +27,24 @@ object Extras {
     (0.0, 40.0, "b0"), (40.0, 90.0, "b1"), (90.0, 160.0, "b2"),
     (160.0, 250.0, "b3"), (250.0, 100000.0, "b4"))
 
-  /** Round-trip sinks write to a fresh directory per invocation: an
-    * `overwrite` into a shared path would delete the files a previous
-    * invocation's still-lazy DataFrame references.
-    */
-  private val sinkCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def sinkDir(fmt: String, d: String): String =
-    s"/tmp/graft_${fmt}_${Tables.cacheKey(d)}_${sinkCounter.incrementAndGet()}"
-
-  /** The write-once binary file corpus (stable dir + _BUILT marker,
-    * deterministic content: one file per doc_id < 200, content =
-    * text + newline via the text writer), read back through the
-    * binaryFile source with the key recovered from the partition
-    * directory. Shared by q_binary_source and the cross-modal join
-    * (media.Multimodal) — in production these files are the
-    * downloaded image set. Single-process guard, same contract as
-    * the streaming replay fixture (Streams.scala). The resolved
-    * relation comes from the session's relation memo (`Tables.read`):
-    * the fixture's 200 partition directories make each fresh resolve
-    * a distributed listing job.
+  /** The write-once binary file corpus (a warehouse artifact,
+    * `SessionResources.artifact`; deterministic content: one file per
+    * doc_id < 200, content = text + newline via the text writer), read
+    * back through the binaryFile source with the key recovered from the
+    * partition directory. Shared by q_binary_source and the cross-modal
+    * join (media.Multimodal) — in production these files are the
+    * downloaded image set. The resolved relation comes from the
+    * session's relation memo (`Tables.read`): the fixture's 200
+    * partition directories make each fresh resolve a distributed
+    * listing job.
     */
   private[graft] def binaryFixture(s: SparkSession, d: String): DataFrame = {
-    val out = s"/tmp/graft_binfix_${Tables.cacheKey(d)}"
-    val marker = new java.io.File(out, "_BUILT")
-    if (!marker.exists()) synchronized {
-      if (!marker.exists()) {
-        Tables.documents(s, d).filter(col("doc_id") < 200)
-          .select(col("doc_id"), col("text"))
-          .write.partitionBy("doc_id").mode("overwrite").text(out)
-        marker.createNewFile()
-      }
+    val out = SessionResources.artifact(s, d, "binfix") { dir =>
+      Tables.documents(s, d).filter(col("doc_id") < 200)
+        .select(col("doc_id"), col("text"))
+        .write.partitionBy("doc_id").mode("overwrite").text(dir.toString)
     }
-    Tables.read(s, out, "binaryFile")
+    Tables.read(s, out.toString, "binaryFile")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -352,7 +338,7 @@ object Extras {
     // scale `mergeSchema` costs one footer read per file, after which
     // the unified schema prunes/pushes down like any other scan.
     "q_schema_merge" -> ((s, d) => {
-      val out = sinkDir("evolve", d)
+      val out = SessionResources.scratchDir(s, "evolve")
       val base = Tables.orders(s, d)
       base.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_orderstatus"))
@@ -370,7 +356,7 @@ object Extras {
     // an appended batch, read back as one table.
     "q_append_sink" -> ((s, d) => {
       import s.implicits._
-      val out = sinkDir("append", d)
+      val out = SessionResources.scratchDir(s, "append")
       Tables.region(s, d).select(col("r_regionkey"), col("r_name"))
         .write.mode("overwrite").parquet(out)
       Seq((5, "VIRTUAL_A"), (6, "VIRTUAL_B")).toDF("r_regionkey", "r_name")
@@ -381,7 +367,7 @@ object Extras {
     // CSV sink + source round-trip (integer-valued columns: CSV has no
     // binary-exact double representation guarantee across writers).
     "q_csv_roundtrip" -> ((s, d) => {
-      val out = sinkDir("csv", d)
+      val out = SessionResources.scratchDir(s, "csv")
       Tables.events(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"))
@@ -394,7 +380,7 @@ object Extras {
 
     // ORC sink + source round-trip.
     "q_orc_roundtrip" -> ((s, d) => {
-      val out = sinkDir("orc", d)
+      val out = SessionResources.scratchDir(s, "orc")
       Tables.part(s, d)
         .groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n"), min(col("p_size")).as("min_size"),
@@ -414,11 +400,10 @@ object Extras {
     // files partition-local with zero shuffle, and partition pruning
     // on the key applies before any byte is read.
     //
-    // The file corpus is a WRITE-ONCE fixture (stable dir + _BUILT
-    // marker, deterministic content): in production the binary files
-    // already exist — re-materializing 200 partition directories per
-    // run benched as the entire query cost. Single-process guard,
-    // same contract as the streaming replay fixture (Streams.scala).
+    // The file corpus is a WRITE-ONCE warehouse artifact
+    // (`binaryFixture`, deterministic content): in production the
+    // binary files already exist — re-materializing 200 partition
+    // directories per run benched as the entire query cost.
     "q_binary_source" -> ((s, d) =>
       binaryFixture(s, d)
         .select(col("doc_id").cast("long").as("doc_id"), col("length"),
@@ -442,7 +427,7 @@ object Extras {
     // source preserves line multiplicity, and only 16-byte hashes
     // ever enter the exchange.
     "q_text_source" -> ((s, d) => {
-      val out = sinkDir("textlines", d)
+      val out = SessionResources.scratchDir(s, "textlines")
       Tables.documents(s, d).select(col("text"))
         .write.mode("overwrite").text(out)
       val lines = s.read.text(out)
@@ -462,7 +447,7 @@ object Extras {
 
     // JSON sink + source round-trip.
     "q_json_roundtrip" -> ((s, d) => {
-      val out = sinkDir("json", d)
+      val out = SessionResources.scratchDir(s, "json")
       Tables.orders(s, d)
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"),

@@ -33,7 +33,7 @@ object Similarity {
     * frozen 6 bits (bucket occupancy doubles with n, so candidates
     * grow n²/buckets), and 1.5 with the width tracking log2(n). The
     * count comes from parquet row-group metadata (a count() over the
-    * id column) once per corpus dir, then memoizes.
+    * id column) once per session, then memoizes ([[corpusCount]]).
     */
   private val AnnTables = 8
   private val AnnBits = 6 // floor: 64 buckets/table keeps tiny test corpora populated
@@ -48,19 +48,26 @@ object Similarity {
       math.ceil(math.log(math.max(n, 1).toDouble / TargetBucket) /
         math.log(2.0)).toInt)
 
+  /** The LSH width of the corpus in `d`. Through [[corpusCount]], the
+    * first bench trial of an LSH query in a session pays the count job;
+    * later trials read the memo.
+    */
   private[graft] def adaptiveBits(s: SparkSession, d: String): Int =
     bitsFor(corpusCount(s, d))
 
-  /** Memoized embeddings-corpus row count — the one number every
-    * corpus-adaptive knob (LSH signature width, IVF cell count)
-    * derives from; counted once per corpus dir from parquet row-group
-    * metadata.
+  /** Embeddings-corpus row count — the one number every
+    * corpus-adaptive knob (LSH signature width, IVF cell count, PQ code
+    * count) derives from; counted from parquet row-group metadata once
+    * per session and memoized on the embeddings path
+    * (`SessionResources.memo`), recounted if the embeddings are
+    * rewritten. So the first bench trial of a consumer in a session
+    * pays the count job, and later trials read the memo.
     */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[graft] def corpusCount(s: SparkSession, d: String): Long =
-    countCache.computeIfAbsent(graft.Tables.cacheKey(d),
-      _ => java.lang.Long.valueOf(Tables.embeddings(s, d).count())).longValue
+  private[graft] def corpusCount(s: SparkSession, d: String): Long = {
+    val vecs = s"$d/embeddings.parquet"
+    graft.SessionResources.memo(s, s"corpus_count:$vecs", vecs)(
+      Tables.embeddings(s, d).count())
+  }
 
   /** Fixed-size query batch: the first QueryBatch vec_ids. Search cost
     * is O(|batch| · candidates-per-query) — CONSTANT in corpus size. A
@@ -192,6 +199,9 @@ object Similarity {
   private[graft] def ivfKFor(n: Long): Int =
     math.max(16, math.min(IvfMaxFlatK.toLong,
       (n + IvfCellTarget - 1) / IvfCellTarget).toInt)
+  /** The IVF cell count of the corpus in `d`; like [[adaptiveBits]], the
+    * first bench trial in a session pays the count, later ones read the
+    * memo. */
   private[graft] def adaptiveIvfK(s: SparkSession, d: String): Int =
     ivfKFor(corpusCount(s, d))
 
@@ -427,7 +437,8 @@ object Similarity {
     * with PqM·codes rows total — broadcast-size at any corpus scale.
     * Each subspace's k-means fits on the same bounded
     * ordered-by-seeded-hash sample as the IVF quantizer (Θ(codes)
-    * rows, never the corpus), deterministic seed per subspace.
+    * rows, never the corpus), deterministic seed per subspace. The
+    * corpus count is read only when the layout is built.
     */
   private[graft] def pqCodebooks(s: SparkSession, d: String): DataFrame =
     graft.sources.Layouts.ensureLayout(s, d, "pq_codebooks") {

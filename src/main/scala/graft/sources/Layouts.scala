@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Exact.{money, one, rate}
-import graft.Tables
+import graft.{SessionResources, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,18 +18,11 @@ import org.apache.spark.sql.functions._
   *    into directory pruning: the scan lists only matching partitions
   *    (`PartitionFilters` in the plan), reading nothing else.
   *
-  * The written layouts are cached per (sfDir, session) under /tmp and
-  * rebuilt only when absent — mirroring how a real warehouse writes
-  * once and queries many times.
+  * The written layouts are write-once artifacts in the warehouse, one
+  * per data dir (`SessionResources.artifact`), built only when absent —
+  * mirroring how a real warehouse writes once and queries many times.
   */
 object Layouts {
-
-  /** Per-sf suffix for table/dir names: the full path sanitized (no
-    * 32-bit-hash collisions); dots stripped too — they'd read as a
-    * schema separator in a table identifier.
-    */
-  private[graft] def sfSuffix(d: String): String =
-    Tables.cacheKey(d).replaceAll("[^A-Za-z0-9_]", "_")
 
   /** Write-once parquet layout under the warehouse: built on first
     * use, then only ever RE-READ — by this session and by any later
@@ -40,40 +33,39 @@ object Layouts {
     * layouts written once and queried many times, exactly like the
     * bucketed tables (`ensureBucketed`) — not session caches. A
     * half-written dir (no `_SUCCESS`, e.g. a killed build) is cleared
-    * and rebuilt. Re-attach goes through the session's relation memo
-    * (`Tables.parquet`); a rebuild invalidates its entry.
+    * and rebuilt (`SessionResources.artifact`). Re-attach goes through
+    * the session's relation memo (`Tables.parquet`); a rebuild
+    * invalidates its entry.
     */
   private[graft] def ensureLayout(s: SparkSession, d: String, name: String,
       partitionCols: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
-    val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-    val loc = java.nio.file.Paths.get(wh, s"${name}_${sfSuffix(d)}")
-    synchronized {
-      if (!java.nio.file.Files.exists(loc.resolve("_SUCCESS"))) {
-        Tables.deleteTree(loc)
-        val w = build.write.mode("overwrite")
-        (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
-          .parquet(loc.toString)
-        Tables.forget(loc.toString)
-      }
+    val loc = SessionResources.artifact(s, d, name) { dir =>
+      val w = build.write.mode("overwrite")
+      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
+        .parquet(dir.toString)
     }
     Tables.parquet(s, loc.toString)
   }
 
+  /** The bucketed table `base` of data dir `d`: named after its
+    * warehouse dir, `<base>_<key(d)>`, so data dirs never collide.
+    */
+  private[graft] def bucketedTable(s: SparkSession, d: String, base: String): String =
+    SessionResources.artifactDir(s, d, base).getFileName.toString
+
   /** One-time bucketed write of orders + lineitem on the join key.
     * Tables land in the session's default warehouse (a static conf
-    * that can't be changed post-session); the per-sf suffix keeps
-    * scale factors from colliding.
+    * that can't be changed post-session).
     */
   private def ensureBucketed(s: SparkSession, d: String): Unit = synchronized {
-    val suffix = sfSuffix(d)
-    def writeBucketed(name: String, df: => DataFrame, key: String): Unit =
+    def writeBucketed(base: String, df: => DataFrame, key: String): Unit = {
+      val name = bucketedTable(s, d, base)
       if (!s.catalog.tableExists(name)) {
         // files may survive a previous session while the in-memory
         // catalog forgot the table: re-attach them as an external
         // bucketed table (write once, query in every later session)
-        val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-        val loc = java.nio.file.Paths.get(wh, name)
-        if (java.nio.file.Files.exists(loc.resolve("_SUCCESS"))) {
+        val loc = SessionResources.artifactDir(s, d, base)
+        if (SessionResources.built(loc)) {
           s.sql(s"""CREATE TABLE $name (${df.schema.toDDL}) USING parquet
                    |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
                    |LOCATION '$loc'""".stripMargin)
@@ -87,8 +79,9 @@ object Layouts {
             .mode("overwrite").saveAsTable(name)
         }
       }
-    writeBucketed(s"orders_b_$suffix", Tables.orders(s, d), "o_orderkey")
-    writeBucketed(s"lineitem_b_$suffix", Tables.lineitem(s, d), "l_orderkey")
+    }
+    writeBucketed("orders_b", Tables.orders(s, d), "o_orderkey")
+    writeBucketed("lineitem_b", Tables.lineitem(s, d), "l_orderkey")
   }
 
   /** Versioned (time-travel) layout — the Delta-log pattern in its
@@ -107,32 +100,24 @@ object Layouts {
     * copy-on-write of the 1995 files alone (the q_delete_rewrite
     * mutation, now with history retained).
     */
-  private[graft] def ensureTimeTravel(s: SparkSession, d: String): String = {
-    val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-    val dir = java.nio.file.Paths.get(wh, s"timetravel_${sfSuffix(d)}")
-    synchronized {
-      if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
-        Tables.deleteTree(dir)
-        val base = Tables.orders(s, d)
-          .withColumn("o_year", year(col("o_orderdate")))
-        base.write.partitionBy("o_year").parquet(s"$dir/v0")
-        val v0 = s.read.parquet(s"$dir/v0")
-          .select(input_file_name().as("path")).distinct()
-        base.filter(col("o_year") === 1995 && col("o_orderstatus") =!= "F")
-          .write.partitionBy("o_year").parquet(s"$dir/v1")
-        val v1 = s.read.parquet(s"$dir/v1")
-          .select(input_file_name().as("path")).distinct()
-        v0.select(lit(0L).as("ver"), lit("add").as("action"), col("path"))
-          .unionAll(v0.filter(col("path").contains("o_year=1995"))
-            .select(lit(1L).as("ver"), lit("remove").as("action"), col("path")))
-          .unionAll(v1.select(lit(1L).as("ver"), lit("add").as("action"),
-            col("path")))
-          .coalesce(1).write.parquet(s"$dir/_log")
-        java.nio.file.Files.createFile(dir.resolve("_SUCCESS"))
-      }
-    }
-    dir.toString
-  }
+  private[graft] def ensureTimeTravel(s: SparkSession, d: String): String =
+    SessionResources.artifact(s, d, "timetravel") { dir =>
+      val base = Tables.orders(s, d)
+        .withColumn("o_year", year(col("o_orderdate")))
+      base.write.partitionBy("o_year").parquet(s"$dir/v0")
+      val v0 = s.read.parquet(s"$dir/v0")
+        .select(input_file_name().as("path")).distinct()
+      base.filter(col("o_year") === 1995 && col("o_orderstatus") =!= "F")
+        .write.partitionBy("o_year").parquet(s"$dir/v1")
+      val v1 = s.read.parquet(s"$dir/v1")
+        .select(input_file_name().as("path")).distinct()
+      v0.select(lit(0L).as("ver"), lit("add").as("action"), col("path"))
+        .unionAll(v0.filter(col("path").contains("o_year=1995"))
+          .select(lit(1L).as("ver"), lit("remove").as("action"), col("path")))
+        .unionAll(v1.select(lit(1L).as("ver"), lit("add").as("action"),
+          col("path")))
+        .coalesce(1).write.parquet(s"$dir/_log")
+    }.toString
 
   /** Read the layout as of version `ver`: live files = adds ≤ ver not
     * removed ≤ ver. Only the metadata log is collected; the data read
@@ -164,20 +149,13 @@ object Layouts {
     */
   private[graft] def ensureClone(s: SparkSession, d: String): String = {
     val src = ensureTimeTravel(s, d)
-    val wh = new java.net.URI(s.conf.get("spark.sql.warehouse.dir")).getPath
-    val dir = java.nio.file.Paths.get(wh, s"ttclone_${sfSuffix(d)}")
-    synchronized {
-      if (!java.nio.file.Files.exists(dir.resolve("_SUCCESS"))) {
-        Tables.deleteTree(dir)
-        val log = s.read.parquet(s"$src/_log").filter(col("ver") <= 1L)
-        log.filter(col("action") === "add").select("path")
-          .except(log.filter(col("action") === "remove").select("path"))
-          .select(lit(0L).as("ver"), lit("add").as("action"), col("path"))
-          .coalesce(1).write.parquet(s"$dir/_log")
-        java.nio.file.Files.createFile(dir.resolve("_SUCCESS"))
-      }
-    }
-    dir.toString
+    SessionResources.artifact(s, d, "ttclone") { dir =>
+      val log = s.read.parquet(s"$src/_log").filter(col("ver") <= 1L)
+      log.filter(col("action") === "add").select("path")
+        .except(log.filter(col("action") === "remove").select("path"))
+        .select(lit(0L).as("ver"), lit("add").as("action"), col("path"))
+        .coalesce(1).write.parquet(s"$dir/_log")
+    }.toString
   }
 
   /** Read the clone (its version 0 = the source's version 1). */
@@ -189,20 +167,12 @@ object Layouts {
     s.read.parquet(live.toIndexedSeq: _*)
   }
 
-  /** Fresh dir per q_delete_rewrite invocation — the rewrite mutates
-    * its layout, so it must never share with q_partition_pruning's.
-    */
-  private val delCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def ensurePartitioned(s: SparkSession, d: String): String = {
-    val dir = s"/tmp/graft_part_${sfSuffix(d)}"
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+  private def ensurePartitioned(s: SparkSession, d: String): String =
+    SessionResources.artifact(s, d, "orders_by_year") { dir =>
       Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
-        .write.partitionBy("o_year").mode("overwrite").parquet(dir)
-    }
-    dir
-  }
+        .write.partitionBy("o_year").mode("overwrite").parquet(dir.toString)
+    }.toString
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Co-located join on bucketed tables: zero exchange before the
@@ -227,7 +197,7 @@ object Layouts {
       // is the point of this operator (1/8 of the files at any scale).
       s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
         "false")
-      s.table(s"orders_b_${sfSuffix(d)}")
+      s.table(bucketedTable(s, d, "orders_b"))
         .filter(col("o_orderkey") === 42)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderpriority"))
@@ -235,9 +205,8 @@ object Layouts {
 
     "q_bucketed_join" -> ((s, d) => {
       ensureBucketed(s, d)
-      val suffix = sfSuffix(d)
-      val o = s.table(s"orders_b_$suffix")
-      val l = s.table(s"lineitem_b_$suffix")
+      val o = s.table(bucketedTable(s, d, "orders_b"))
+      val l = s.table(bucketedTable(s, d, "lineitem_b"))
       o.join(l, o("o_orderkey") === l("l_orderkey"))
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_items"),
@@ -252,8 +221,10 @@ object Layouts {
     // REWRITING the affected partition without its tombstoned rows —
     // dynamic partition overwrite touches only that partition's
     // directory, so the rewrite cost is one partition, not the table.
+    // A fresh scratch dir per invocation: the rewrite mutates its
+    // layout, so it must never share with q_partition_pruning's.
     "q_delete_rewrite" -> ((s, d) => {
-      val out = s"/tmp/graft_del_${Tables.cacheKey(d)}_${delCounter.incrementAndGet()}"
+      val out = SessionResources.scratchDir(s, "delete_rewrite")
       val byYear = Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
       byYear.write.partitionBy("o_year").mode("overwrite").parquet(out)

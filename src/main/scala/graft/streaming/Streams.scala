@@ -3,7 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import graft.Exact.money
-import graft.Tables
+import graft.{SessionResources, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -39,43 +39,32 @@ object Streams {
   // never drops at or above the minimum of this set (ADVICE r17: a
   // fast drain must not drop a slower in-flight drain's sink view)
   private val inFlightSinks =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    new java.util.concurrent.ConcurrentSkipListSet[Integer]()
+
+  /** The file-stream source wants a directory: a write-once warehouse
+    * dir (`SessionResources.artifact`) holding one symlink to `d`'s
+    * `table`.parquet.
+    */
+  private def linkDir(s: SparkSession, d: String, table: String): String =
+    SessionResources.artifact(s, d, s"stream_$table") { dir =>
+      java.nio.file.Files.createDirectories(dir)
+      java.nio.file.Files.createSymbolicLink(dir.resolve(s"$table.parquet"),
+        java.nio.file.Paths.get(d, s"$table.parquet").toAbsolutePath)
+    }.toString
 
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.t(s, d, "events").schema // raw nanos or µs NTZ
-    // The file-stream source wants a directory; expose the single
-    // events.parquet file through a per-sf symlink dir.
-    val streamDir = java.nio.file.Paths.get("/tmp", "graft_stream_" + Tables.cacheKey(d))
-    val link = streamDir.resolve("events.parquet")
-    val target = java.nio.file.Paths.get(d, "events.parquet").toAbsolutePath
-    // Re-create if absent or pointing at a stale target.
-    if (!java.nio.file.Files.isSymbolicLink(link) ||
-        java.nio.file.Files.readSymbolicLink(link) != target) {
-      java.nio.file.Files.createDirectories(streamDir)
-      java.nio.file.Files.deleteIfExists(link)
-      java.nio.file.Files.createSymbolicLink(link, target)
-    }
-    Tables.normalizeTs(s.readStream.schema(schema).parquet(streamDir.toString))
+    Tables.normalizeTs(s.readStream.schema(schema).parquet(linkDir(s, d, "events")))
   }
 
-  /** The documents table as a file-stream source (same per-sf symlink
-    * dir trick as `eventsStream`) — the ingest side of the streaming
+  /** The documents table as a file-stream source (the same symlink dir
+    * as `eventsStream`) — the ingest side of the streaming
     * registry-dedup query.
     */
   private def docsStream(s: SparkSession, d: String): DataFrame = {
     val schema = Tables.t(s, d, "documents").schema
-    val streamDir = java.nio.file.Paths.get("/tmp",
-      "graft_docstream_" + Tables.cacheKey(d))
-    val link = streamDir.resolve("documents.parquet")
-    val target = java.nio.file.Paths.get(d, "documents.parquet").toAbsolutePath
-    if (!java.nio.file.Files.isSymbolicLink(link) ||
-        java.nio.file.Files.readSymbolicLink(link) != target) {
-      java.nio.file.Files.createDirectories(streamDir)
-      java.nio.file.Files.deleteIfExists(link)
-      java.nio.file.Files.createSymbolicLink(link, target)
-    }
-    s.readStream.schema(schema).parquet(streamDir.toString)
+    s.readStream.schema(schema).parquet(linkDir(s, d, "documents"))
   }
 
   /** Documents replayed as four hash-sliced parquet files consumed
@@ -89,48 +78,42 @@ object Streams {
     */
   private def docsStreamMulti(s: SparkSession, d: String): DataFrame = {
     val schema = Tables.t(s, d, "documents").schema
-    val dir = java.nio.file.Paths.get("/tmp", "graft_docstream4h_" + Tables.cacheKey(d))
-    ensureBatchFixture(dir) {
+    val dir = ensureBatchFixture(s, d, "docstream4h") {
       val sliced = Tables.t(s, d, "documents")
         .withColumn("__slice", (pmod(xxhash64(col("doc_id")), lit(4)) + 1).cast("int"))
       (1 to 4).map(i => i -> sliced.filter(col("__slice") === i).drop("__slice"))
     }
     s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(dir.toString)
+      .parquet(dir)
   }
 
-  /** Write-once multi-batch fixture protocol shared by the replay
-    * builders: guarded build (JVM-local `synchronized` + the _READY
-    * marker — serializes threads in ONE JVM; Verify and Bench are
-    * driver-run sequentially, so cross-process races don't occur
-    * here; two concurrent JVMs would need a file lock or
-    * build-into-temp-then-atomic-rename), one parquet file per batch,
-    * distinct ASCENDING mtimes so the file-stream source consumes the
-    * batches in order.
+  /** Write-once multi-batch replay fixture `name` of data dir `d`,
+    * shared by the replay builders: a warehouse artifact
+    * (`SessionResources.artifact`: one JVM-wide build lock, `_SUCCESS`
+    * written last; Verify and Bench never share a warehouse between two
+    * JVMs at once, so cross-process races don't occur) holding one
+    * parquet file per batch, with distinct ASCENDING mtimes so the
+    * file-stream source consumes the batches in order. Returns the
+    * fixture dir.
     */
-  private def ensureBatchFixture(dir: java.nio.file.Path)(
-      batches: => Seq[(Int, DataFrame)]): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    if (!Files.exists(dir.resolve("_READY"))) synchronized {
-      if (!Files.exists(dir.resolve("_READY"))) {
-        Tables.deleteTree(dir)
-        Files.createDirectories(dir)
-        batches.foreach { case (i, df) =>
-          val tmp = dir.resolve(s"__build_$i")
-          df.coalesce(1).write.parquet(tmp.toString)
-          val part = Files.list(tmp).iterator().asScala
-            .find(_.getFileName.toString.endsWith(".parquet")).get
-          Files.move(part, dir.resolve(f"batch_$i%02d.parquet"))
-          // distinct mtimes: the file-stream source picks oldest first
-          Files.setLastModifiedTime(dir.resolve(f"batch_$i%02d.parquet"),
-            java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-          Tables.deleteTree(tmp)
-        }
-        Files.createFile(dir.resolve("_READY"))
+  private def ensureBatchFixture(s: SparkSession, d: String, name: String)(
+      batches: => Seq[(Int, DataFrame)]): String =
+    SessionResources.artifact(s, d, name) { dir =>
+      import java.nio.file.Files
+      import scala.jdk.CollectionConverters._
+      Files.createDirectories(dir)
+      batches.foreach { case (i, df) =>
+        val tmp = dir.resolve(s"__build_$i")
+        df.coalesce(1).write.parquet(tmp.toString)
+        val part = Files.list(tmp).iterator().asScala
+          .find(_.getFileName.toString.endsWith(".parquet")).get
+        Files.move(part, dir.resolve(f"batch_$i%02d.parquet"))
+        // distinct mtimes: the file-stream source picks oldest first
+        Files.setLastModifiedTime(dir.resolve(f"batch_$i%02d.parquet"),
+          java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
+        Tables.deleteTree(tmp)
       }
-    }
-  }
+    }.toString
 
   /** The 3 time-ordered batch slices of the events table (the shared
     * slicing of both replay fixtures): ntile(3) over the (ts,
@@ -154,14 +137,12 @@ object Streams {
     * flushes at end-of-stream.
     */
   private[graft] def eventsStreamMulti(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.Paths
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.t(s, d, "events").schema // raw nanos or µs NTZ
-    val dir = Paths.get("/tmp", "graft_stream3_" + Tables.cacheKey(d))
-    ensureBatchFixture(dir)(eventSlices(s, d))
+    val dir = ensureBatchFixture(s, d, "stream3")(eventSlices(s, d))
     Tables.normalizeTs(
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(dir.toString))
+        .parquet(dir))
   }
 
   /** The 3-batch replay plus TWO TERMINAL-FLUSH batches: each flush
@@ -192,11 +173,9 @@ object Streams {
     * state ever flushes is output-invisible.
     */
   private def eventsStreamMultiFlush(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.Paths
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.t(s, d, "events").schema
-    val dir = Paths.get("/tmp", "graft_stream3f_" + Tables.cacheKey(d))
-    ensureBatchFixture(dir) {
+    val dir = ensureBatchFixture(s, d, "stream3f") {
       val raw = Tables.t(s, d, "events")
       val tsIsLong =
         raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
@@ -222,7 +201,7 @@ object Streams {
     }
     Tables.normalizeTs(
       s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(dir.toString))
+        .parquet(dir))
   }
 
   /** Run a streaming aggregation to completion against the finite
@@ -697,7 +676,7 @@ object Streams {
     // then read back. With the finite file source this converges to
     // the full batch aggregate, which the oracle checks.
     "q_stream_foreachbatch" -> ((s, d) => {
-      val out = s"/tmp/graft_fb_${Tables.cacheKey(d)}_${sinkCounter.incrementAndGet()}"
+      val out = SessionResources.scratchDir(s, "foreachbatch")
       val agg = eventsStream(s, d)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -738,7 +717,7 @@ object Streams {
     // map-combined aggregate over the arriving slice, state = the
     // bounded partial table, the corpus never rescanned.
     "q_stream_datasheet" -> ((s, d) => {
-      val out = s"/tmp/graft_dsb_${Tables.cacheKey(d)}_${sinkCounter.incrementAndGet()}"
+      val out = SessionResources.scratchDir(s, "datasheet")
       val key = "spark.sql.shuffle.partitions"
       val prev = s.conf.get(key)
       s.conf.set(key, DrainStatePartitions)
@@ -784,7 +763,7 @@ object Streams {
     // rewrite (q_delete_rewrite's dynamic-overwrite mechanics); the
     // txn log stays KB-sized forever.
     "q_stream_upsert" -> ((s, d) => {
-      val root = s"/tmp/graft_upsert_${Tables.cacheKey(d)}_${sinkCounter.incrementAndGet()}"
+      val root = SessionResources.scratchDir(s, "upsert")
       val txnDir = new java.io.File(root, "_txn")
       txnDir.mkdirs()
       val redelivered = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -868,7 +847,7 @@ object Streams {
     // touches rewrite (the q_delete_rewrite dynamic-overwrite
     // mechanics); the txn log stays KB-sized forever.
     "q_stream_index" -> ((s, d) => {
-      val root = s"/tmp/graft_stridx_${Tables.cacheKey(d)}_${sinkCounter.incrementAndGet()}"
+      val root = SessionResources.scratchDir(s, "stream_index")
       val txnDir = new java.io.File(root, "_txn")
       txnDir.mkdirs()
       val redelivered = new java.util.concurrent.atomic.AtomicInteger(0)

@@ -42,10 +42,7 @@ class BinaryFixtureSpec extends SparkSpec {
   }
 
   test("ensureLayout memoizes re-attach within a session and invalidates on rebuild") {
-    import java.nio.file.Paths
-    val wh = Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val loc = wh.resolve(s"memo_probe_${sources.Layouts.sfSuffix(sf)}")
+    val loc = SessionResources.artifactDir(spark, sf, "memo_probe")
     def delete(): Unit = Tables.deleteTree(loc)
     delete() // start from no layout, whatever an earlier run left behind
     var builds = 0

@@ -89,9 +89,7 @@ class MmSpec extends SparkSpec {
     assert(man.forall { case (s0, _, _, _, _, _) => s0 >= 0 && s0 < nsh })
     // a 2048-token multimodal window never splits across shard files,
     // and each occupied shard dir holds exactly one parquet file
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-    val root = java.nio.file.Paths.get(wh,
-      s"mm_shards_${sources.Layouts.sfSuffix(sf)}")
+    val root = SessionResources.artifactDir(spark, sf, "mm_shards")
     val layout = spark.read.parquet(root.toString)
       .select(col("source"), col("bin"), col("shard").cast("long"))
       .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2)))

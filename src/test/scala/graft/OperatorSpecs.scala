@@ -288,7 +288,7 @@ class EmptyInputSpec extends SparkSpec {
   }
 
   test("empty relation round-trips through a parquet sink with schema") {
-    val dir = s"/tmp/graft_empty_${Tables.cacheKey(sf)}"
+    val dir = SessionResources.scratchDir(spark, "empty")
     empty.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == 0)

@@ -17,19 +17,16 @@ class PersistenceSpec extends SparkSpec {
     val before = run("q_bucketed_join").collect().toSeq
     assert(before.nonEmpty)
 
-    val suffix = sources.Layouts.sfSuffix(sf)
-    val wh = Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val dataFiles = Seq(s"orders_b_$suffix", s"lineitem_b_$suffix").flatMap { t =>
-      Files.list(wh.resolve(t)).iterator().asScala
+    val dataFiles = Seq("orders_b", "lineitem_b").flatMap { t =>
+      Files.list(SessionResources.artifactDir(spark, sf, t)).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
     }
     assert(dataFiles.nonEmpty)
     val mtimes = dataFiles.map(f => f -> Files.getLastModifiedTime(f)).toMap
 
     // external tables: dropping the catalog entry must keep the files
-    spark.sql(s"DROP TABLE orders_b_$suffix")
-    spark.sql(s"DROP TABLE lineitem_b_$suffix")
+    spark.sql(s"DROP TABLE ${sources.Layouts.bucketedTable(spark, sf, "orders_b")}")
+    spark.sql(s"DROP TABLE ${sources.Layouts.bucketedTable(spark, sf, "lineitem_b")}")
     assert(dataFiles.forall(Files.exists(_)))
 
     val after = run("q_bucketed_join").collect().toSeq
@@ -46,9 +43,7 @@ class PersistenceSpec extends SparkSpec {
     val before = run("q_dedup_ngram_jaccard").collect().toSeq
     assert(before.nonEmpty)
 
-    val wh = Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val dir = wh.resolve(s"dedup_neardup_pairs_${sources.Layouts.sfSuffix(sf)}")
+    val dir = SessionResources.artifactDir(spark, sf, "dedup_neardup_pairs")
     assert(Files.exists(dir.resolve("_SUCCESS")))
     val dataFiles = Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -67,9 +62,7 @@ class PersistenceSpec extends SparkSpec {
     val before = run("q_dedup_incremental").collect().toSeq
     assert(before.nonEmpty)
 
-    val wh = Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val dir = wh.resolve(s"fp_registry_${sources.Layouts.sfSuffix(sf)}")
+    val dir = SessionResources.artifactDir(spark, sf, "fp_registry")
     assert(Files.exists(dir.resolve("_SUCCESS")))
     val dataFiles = Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -87,9 +80,7 @@ class PersistenceSpec extends SparkSpec {
     val before = run("q_dedup_spans").collect().toSeq
     assert(before.nonEmpty)
 
-    val wh = Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val dir = wh.resolve(s"dedup_spans_${sources.Layouts.sfSuffix(sf)}")
+    val dir = SessionResources.artifactDir(spark, sf, "dedup_spans")
     assert(Files.exists(dir.resolve("_SUCCESS")))
     val dataFiles = Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -108,11 +99,8 @@ class PersistenceSpec extends SparkSpec {
     val before = run("q_sim_ann_ivf_pq").collect().toSeq
     assert(before.nonEmpty)
 
-    val wh = Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val suffix = sources.Layouts.sfSuffix(sf)
-    val dataFiles = Seq(s"pq_codebooks_$suffix", s"pq_codes_$suffix").flatMap { t =>
-      Files.walk(wh.resolve(t)).iterator().asScala
+    val dataFiles = Seq("pq_codebooks", "pq_codes").flatMap { t =>
+      Files.walk(SessionResources.artifactDir(spark, sf, t)).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
     }
     assert(dataFiles.nonEmpty)
@@ -129,12 +117,9 @@ class PersistenceSpec extends SparkSpec {
     val before = run("q_sim_ann_ivf").collect().toSeq
     assert(before.nonEmpty)
 
-    val wh = Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val suffix = sources.Layouts.sfSuffix(sf)
     // cell-partitioned: data files live under cell=N subdirectories
-    val dataFiles = Seq(s"ivf_index_$suffix", s"ivf_centroids_$suffix").flatMap { t =>
-      Files.walk(wh.resolve(t)).iterator().asScala
+    val dataFiles = Seq("ivf_index", "ivf_centroids").flatMap { t =>
+      Files.walk(SessionResources.artifactDir(spark, sf, t)).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
     }
     assert(dataFiles.nonEmpty)
@@ -150,9 +135,7 @@ class PersistenceSpec extends SparkSpec {
   test("HLL sketch-partial layout re-attaches; rollups never rescan or rebuild") {
     val before = run("q_hll_partial_union").collect().toSeq
     assert(before.nonEmpty)
-    val wh = Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val dir = wh.resolve(s"hll_partials_${sources.Layouts.sfSuffix(sf)}")
+    val dir = SessionResources.artifactDir(spark, sf, "hll_partials")
     assert(Files.exists(dir.resolve("_SUCCESS")))
     val dataFiles = Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -166,9 +149,7 @@ class PersistenceSpec extends SparkSpec {
   test("PCA basis layout re-attaches without re-running the moment pass") {
     val before = run("q_embed_pca").collect().toSeq
     assert(before.nonEmpty)
-    val wh = Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val dir = wh.resolve(s"pca_basis_${sources.Layouts.sfSuffix(sf)}")
+    val dir = SessionResources.artifactDir(spark, sf, "pca_basis")
     assert(Files.exists(dir.resolve("_SUCCESS")))
     val dataFiles = Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -208,12 +189,9 @@ class Round11PersistenceSpec extends SparkSpec {
     // materialize all three
     Seq("q_moments_merge", "q_quantile_partial_union", "q_dedup_containment")
       .foreach(q => run(q).collect())
-    val wh = java.nio.file.Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val sfx = sources.Layouts.sfSuffix(sf)
     Seq("moment_partials", "quantile_partials", "dedup_containment_pairs")
       .foreach { name =>
-        val dir = wh.resolve(s"${name}_$sfx")
+        val dir = SessionResources.artifactDir(spark, sf, name)
         assert(Files.exists(dir.resolve("_SUCCESS")), name)
         val files = Files.list(dir).iterator().asScala
           .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -234,9 +212,7 @@ class Round12PersistenceSpec extends SparkSpec {
 
   test("knn graph layout re-attaches; graph reads and appends never rebuild") {
     run("q_sim_knn_graph").collect()
-    val wh = java.nio.file.Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val dir = wh.resolve(s"knn_graph_${sources.Layouts.sfSuffix(sf)}")
+    val dir = SessionResources.artifactDir(spark, sf, "knn_graph")
     assert(Files.exists(dir.resolve("_SUCCESS")))
     val files = Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -264,11 +240,8 @@ class Round14PersistenceSpec extends SparkSpec {
   test("graph pair/co-edge layouts re-attach; every graph query reads, never rebuilds") {
     run("q_graph_pagerank").collect()
     run("q_graph_triangles").collect()
-    val wh = java.nio.file.Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val sfx = sources.Layouts.sfSuffix(sf)
     Seq("graph_pairs", "graph_coedges").foreach { n =>
-      val dir = wh.resolve(s"${n}_$sfx")
+      val dir = SessionResources.artifactDir(spark, sf, n)
       assert(Files.exists(dir.resolve("_SUCCESS")), n)
       val files = Files.list(dir).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -285,13 +258,11 @@ class Round14PersistenceSpec extends SparkSpec {
 
   test("refreshed IVF layout re-attaches; the drift report never re-fits") {
     run("q_ivf_refit").collect()
-    val wh = java.nio.file.Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
     // both the refreshed index AND the round-12 drift-report layout
     // (the before/after assignment table) must re-attach: a second
     // report invocation reads thin written rows, never an embedding
     Seq("ivf_refit", "ivf_refit_assign").foreach { n =>
-      val dir = wh.resolve(s"${n}_${sources.Layouts.sfSuffix(sf)}")
+      val dir = SessionResources.artifactDir(spark, sf, n)
       assert(Files.exists(dir.resolve("_SUCCESS")), n)
       val files = Files.walk(dir).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -305,9 +276,7 @@ class Round14PersistenceSpec extends SparkSpec {
 
   test("wrapped train-shard layout re-attaches un-rebuilt") {
     run("q_shard_export_wrapped").collect()
-    val wh = java.nio.file.Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val dir = wh.resolve(s"train_shards_wrapped_${sources.Layouts.sfSuffix(sf)}")
+    val dir = SessionResources.artifactDir(spark, sf, "train_shards_wrapped")
     assert(Files.exists(dir.resolve("_SUCCESS")))
     val files = Files.walk(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
@@ -328,11 +297,8 @@ class Round13PersistenceSpec extends SparkSpec {
     run("q_shard_export").collect()
     run("q_datasheet_partials").collect()
     run("q_doremi_weights").collect()
-    val wh = java.nio.file.Paths.get(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val sfx = sources.Layouts.sfSuffix(sf)
     Seq("train_shards", "datasheet_partials", "doremi_weights").foreach { n =>
-      val dir = wh.resolve(s"${n}_$sfx")
+      val dir = SessionResources.artifactDir(spark, sf, n)
       assert(Files.exists(dir.resolve("_SUCCESS")), n)
       val files = Files.walk(dir).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq

@@ -876,9 +876,7 @@ class StreamingSpec extends SparkSpec {
     assert(man.forall { case (s0, _, _, _, _, _) => s0 >= 0 && s0 < nsh })
     // a trajectory window never splits across shard files; one parquet
     // file per occupied shard dir
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-    val root = java.nio.file.Paths.get(wh,
-      s"rl_shards_${sources.Layouts.sfSuffix(sf)}")
+    val root = SessionResources.artifactDir(spark, sf, "rl_shards")
     val layout = spark.read.parquet(root.toString)
       .select(col("source"), col("bin"), col("shard").cast("long"))
       .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2)))
@@ -1583,10 +1581,8 @@ class CompactionSpec extends SparkSpec {
     assert(after == expectedAfter.toLong, s"after=$after expected=$expectedAfter")
     assert(after < before)
     // the reported counts are real files on disk, not plan artifacts
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
     def parts(name: String): Long = {
-      val p = java.nio.file.Paths.get(wh,
-        s"${name}_${sources.Layouts.sfSuffix(sf)}")
+      val p = SessionResources.artifactDir(spark, sf, name)
       import scala.jdk.CollectionConverters._
       // bucket-partitioned layout: files live under bucket=N dirs
       java.nio.file.Files.walk(p).iterator().asScala
@@ -2624,9 +2620,7 @@ class ShardExportSpec extends SparkSpec {
       assert(vs.map(_._2).distinct.length == 1, s"sequence $k split")
     }
     // file-count law: exactly one parquet file per occupied shard dir
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-    val root = java.nio.file.Paths.get(wh,
-      s"train_shards_${sources.Layouts.sfSuffix(sf)}")
+    val root = SessionResources.artifactDir(spark, sf, "train_shards")
     import scala.jdk.CollectionConverters._
     val dirs = java.nio.file.Files.list(root).iterator().asScala
       .filter(_.getFileName.toString.startsWith("shard=")).toSeq
@@ -3077,7 +3071,7 @@ class ScaleFixtureSpec extends SparkSpec {
   test("derived corpus is deterministic, schema-faithful, and copy-isometric") {
     val base = "/root/testdata/sf0.001"
     val factor = 3
-    val dir = java.nio.file.Paths.get(s"/tmp/graft_scale${factor}x_${Tables.cacheKey(base)}")
+    val dir = SessionResources.artifactDir(spark, base, s"scale${factor}x")
     Tables.deleteTree(dir)
     val d1 = Tools.ensureScaled(spark, base, factor)
     val docs1 = checksum(spark.read.parquet(s"$d1/documents.parquet"))
@@ -3164,9 +3158,7 @@ class PipelineExportSpec extends SparkSpec {
     assert(man.length <= nsh.toInt)
     assert(man.forall { case (s0, _, _, _) => s0 >= 0 && s0 < nsh })
     // whole sequences + one parquet file per occupied shard dir
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-    val root = java.nio.file.Paths.get(wh,
-      s"pipeline_shards_${sources.Layouts.sfSuffix(sf)}")
+    val root = SessionResources.artifactDir(spark, sf, "pipeline_shards")
     import scala.jdk.CollectionConverters._
     val dirs = java.nio.file.Files.list(root).iterator().asScala
       .filter(_.getFileName.toString.startsWith("shard=")).toSeq

@@ -231,9 +231,7 @@ class SftSpec extends SparkSpec {
     assert(man.forall { r =>
       val s0 = r.getAs[Long]("shard"); s0 >= 0 && s0 < nsh })
     // file-count law: one parquet file per occupied shard dir
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-    val root = java.nio.file.Paths.get(wh,
-      s"sft_shards_${sources.Layouts.sfSuffix(sf)}")
+    val root = SessionResources.artifactDir(spark, sf, "sft_shards")
     import scala.jdk.CollectionConverters._
     val dirs = java.nio.file.Files.list(root).iterator().asScala
       .filter(_.getFileName.toString.startsWith("shard=")).toSeq

@@ -7,8 +7,10 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structure rules over `src/main/scala`: sessions are built only by
-  * `GraftSession`, and the only entrypoints are `Bench`, `Verify` and
-  * `Tools`. Comment lines are not code and are skipped.
+  * `GraftSession`, the only entrypoints are `Bench`, `Verify` and
+  * `Tools`, and engine state outside a DataFrame (the memo, the
+  * warehouse path, write-once markers, scratch dirs) is owned by
+  * `SessionResources`. Comment lines are not code and are skipped.
   */
 class StructureLintSpec extends AnyFunSuite {
 
@@ -31,4 +33,14 @@ class StructureLintSpec extends AnyFunSuite {
   test("def main appears only in Bench, Verify and Tools") {
     assert(filesWith("def main(") == Set("Bench.scala", "Verify.scala", "Tools.scala"))
   }
+
+  for (marker <- Seq("ConcurrentHashMap", "spark.sql.warehouse.dir", "\"_SUCCESS\""))
+    test(s"$marker appears only in SessionResources") {
+      assert(filesWith(marker) == Set("SessionResources.scala"))
+    }
+
+  for (marker <- Seq("\"/tmp", "_BUILT", "_READY"))
+    test(s"no $marker in main code") {
+      assert(filesWith(marker).isEmpty)
+    }
 }

@@ -134,9 +134,7 @@ class ToolSpec extends SparkSpec {
     assert(man.map(_.getAs[Long]("n_seqs")).sum == packs.length.toLong,
       "every window lands in exactly one shard")
     // disk law: one parquet file per occupied shard dir
-    val wh = new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath
-    val root = java.nio.file.Paths.get(wh,
-      s"tool_shards_${sources.Layouts.sfSuffix(sf)}")
+    val root = SessionResources.artifactDir(spark, sf, "tool_shards")
     import scala.jdk.CollectionConverters._
     val dirs = java.nio.file.Files.list(root).iterator().asScala
       .filter(_.getFileName.toString.startsWith("shard=")).toSeq
