@@ -12,8 +12,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * }}}
   *
   * Installs the binned-range-join operator (marker function +
-  * optimizer rule). [[graft.plans.RangeJoin.register]] is the
-  * equivalent runtime hook for sessions built elsewhere.
+  * optimizer rule) and the small-sort planner strategy.
+  * [[graft.plans.RangeJoin.register]] and
+  * [[graft.plans.SmallSort.register]] are the equivalent runtime hooks
+  * for sessions built elsewhere.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -23,5 +25,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (exprs: Seq[Expression]) =>
         plans.RangeJoinCond(exprs(0), exprs(1), exprs(2), exprs(3))))
     ext.injectOptimizerRule(_ => plans.BinnedRangeJoinRule)
+    ext.injectPlannerStrategy(_ => plans.SmallSort)
   }
 }

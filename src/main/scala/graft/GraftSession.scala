@@ -18,13 +18,26 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
-  /** Register every graft SQL function (and the binned-range-join
-    * operator) on an existing session. */
+  /** Register every graft SQL function, the binned-range-join
+    * operator and the small-sort strategy on an existing session, and
+    * set the session conf every query relies on:
+    *  - `nanosAsLong`: `events.parquet` stores TIMESTAMP(NANOS), which
+    *    Spark reads only as a long (normalized by `Tables.normalizeTs`);
+    *  - `autoBucketedScan` off: Spark keeps a bucketed scan only for
+    *    operators that need its partitioning, so without this a bare
+    *    key filter on a bucketed layout reads every bucket instead of
+    *    the one its key hashes to.
+    * Query functions set no session conf themselves, so how a session
+    * plans does not depend on which queries ran first.
+    */
   def attach(spark: SparkSession): SparkSession = {
     functions.VectorFunctions.register(spark)
     functions.HashFunctions.register(spark)
     functions.TextFunctions.register(spark)
     plans.RangeJoin.register(spark)
+    plans.SmallSort.register(spark)
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     spark
   }
 

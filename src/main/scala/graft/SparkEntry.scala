@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` is the complete operator inventory (SURVEY.md §2), each
-  * entry a self-contained `(SparkSession, sfDir) => DataFrame`;
+  * entry a self-contained `(SparkSession, sfDir) => DataFrame` that
+  * registers the graft functions it uses (the session conf queries
+  * rely on is set once, by `GraftSession.attach`);
   * `oracleSql` carries the DuckDB-equivalent ANSI SQL for every query
   * whose semantics are SQL-expressible (hash/sketch/LSH queries are
   * rows-only by contract).

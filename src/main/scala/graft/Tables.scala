@@ -46,9 +46,10 @@ object Tables {
   def lineitem(s: SparkSession, d: String)   = t(s, d, "lineitem")
   /** `events.ts` varies across driver testdata generations:
     * TIMESTAMP(NANOS) parquet (which Spark's vectorized reader
-    * rejects — read as raw nanos via the legacy conf and truncate to
-    * µs with integer `div`, since ns-since-epoch exceeds double's
-    * 2^53 mantissa) or native TIMESTAMP_MICROS without timezone
+    * rejects — read as raw nanos via the legacy conf that
+    * `GraftSession.attach` sets, and truncate to µs with integer
+    * `div`, since ns-since-epoch exceeds double's 2^53 mantissa) or
+    * native TIMESTAMP_MICROS without timezone
     * metadata (read as TIMESTAMP_NTZ). Both normalize here to a
     * session-timezone (UTC) microsecond TIMESTAMP — the same values
     * DuckDB sees through `CAST(ts AS TIMESTAMP)`, and one stable type
@@ -62,10 +63,7 @@ object Tables {
       case _ => df.withColumn("ts", col("ts").cast("timestamp"))
     }
 
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(t(s, d, "events"))
-  }
+  def events(s: SparkSession, d: String): DataFrame = normalizeTs(t(s, d, "events"))
   def documents(s: SparkSession, d: String)  = t(s, d, "documents")
   def embeddings(s: SparkSession, d: String) = t(s, d, "embeddings")
 

@@ -12,7 +12,12 @@ import org.apache.spark.sql.functions._
   *    lookup by key → an equality filter that Catalyst pushes into the
   *    Parquet scan (`PushedFilters: [EqualTo(l_orderkey,42)]`), so at
   *    cluster scale only row groups whose min/max straddle the key are
-  *    read.
+  *    read. The plan is one job, one stage and one task:
+  *    `Sort(global) ← Coalesce 1 ← Project ← Filter ← FileScan`. The
+  *    scan's size estimate fits one AQE advisory partition, so
+  *    `plans.SmallSort` sorts one coalesced partition instead of
+  *    sampling the scan for a range exchange. The same holds for the
+  *    sorts of `q_key_range` and `q_insert_append`.
   *  - `query::insert(&Row)` (reference `src/query.rs:3-5`): append of
   *    typed rows → `UNION ALL` of the table with new tuples (the write
   *    path itself is `df.write.mode("append")`; the query shows the

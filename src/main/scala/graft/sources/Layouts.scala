@@ -190,13 +190,9 @@ object Layouts {
     // trade, measurable. Fully oracled.
     "q_point_get_indexed" -> ((s, d) => {
       ensureBucketed(s, d)
-      // DisableUnnecessaryBucketedScan keeps bucketed reading only for
-      // operators that need the output PARTITIONING — it doesn't model
-      // bucket-filter pruning as a benefit, so a bare key filter would
-      // read all 8 buckets. Pin the conf off: bucketed scan + pruning
-      // is the point of this operator (1/8 of the files at any scale).
-      s.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false")
+      // bucketed scan + pruning is the point of this operator (1/8 of
+      // the files at any scale); GraftSession.attach turns off the
+      // autoBucketedScan rule that would drop it for a bare key filter
       s.table(bucketedTable(s, d, "orders_b"))
         .filter(col("o_orderkey") === 42)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),

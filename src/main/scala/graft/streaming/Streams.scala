@@ -53,7 +53,6 @@ object Streams {
     }.toString
 
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.t(s, d, "events").schema // raw nanos or µs NTZ
     Tables.normalizeTs(s.readStream.schema(schema).parquet(linkDir(s, d, "events")))
   }
@@ -137,7 +136,6 @@ object Streams {
     * flushes at end-of-stream.
     */
   private[graft] def eventsStreamMulti(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.t(s, d, "events").schema // raw nanos or µs NTZ
     val dir = ensureBatchFixture(s, d, "stream3")(eventSlices(s, d))
     Tables.normalizeTs(
@@ -173,7 +171,6 @@ object Streams {
     * state ever flushes is output-invisible.
     */
   private def eventsStreamMultiFlush(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = Tables.t(s, d, "events").schema
     val dir = ensureBatchFixture(s, d, "stream3f") {
       val raw = Tables.t(s, d, "events")

@@ -241,7 +241,8 @@ class ScalePlanSpec extends SparkSpec {
 
   test("doc chunking plan is shuffle-free up to the sink sort") {
     val p = plan("q_doc_chunks")
-    // one Exchange only: the final presentation orderBy
+    // at most one Exchange: the final presentation orderBy's range
+    // exchange, which plans.SmallSort drops when the input is small
     assert("Exchange".r.findAllIn(p).size <= 1, p)
     assert(p.contains("Generate explode"), p)
   }
@@ -593,10 +594,13 @@ class Round10PlanSpec extends SparkSpec {
     assert(p.contains("partial_count"), p)
   }
 
-  test("gopher quality filter is one codegen map — only the sink sort exchanges") {
+  test("gopher quality filter is one codegen map — the sink sort runs as one task") {
     val p = plan("q_quality_gopher")
-    assert("Exchange".r.findAllIn(p).size == 1, p)
-    assert(p.contains("rangepartitioning(doc_id"), p)
+    // no exchange at all: the sink sort's input fits one AQE advisory
+    // partition, so it sorts one coalesced partition (plans.SmallSort)
+    assert("Exchange".r.findAllIn(p).size == 0, p)
+    assert("Sort \\[doc_id#\\d+L ASC NULLS FIRST\\], true, 0\n\\s*\\+- Coalesce 1"
+      .r.findFirstIn(p).isDefined, p)
   }
 
   test("interval join pairs meet on the bin equi-join, never a cartesian") {

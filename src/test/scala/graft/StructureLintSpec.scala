@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftSession`, the only entrypoints are `Bench`, `Verify` and
   * `Tools`, and engine state outside a DataFrame (the memo, the
   * warehouse path, write-once markers, scratch dirs) is owned by
-  * `SessionResources`. Comment lines are not code and are skipped.
+  * `SessionResources`, and the session conf every query relies on is
+  * set once, by `GraftSession.attach`, never by a query function.
+  * Comment lines are not code and are skipped.
   */
 class StructureLintSpec extends AnyFunSuite {
 
@@ -42,5 +44,11 @@ class StructureLintSpec extends AnyFunSuite {
   for (marker <- Seq("\"/tmp", "_BUILT", "_READY"))
     test(s"no $marker in main code") {
       assert(filesWith(marker).isEmpty)
+    }
+
+  for (key <- Seq("spark.sql.legacy.parquet.nanosAsLong",
+      "spark.sql.sources.bucketing.autoBucketedScan.enabled"))
+    test(s"$key appears only in GraftSession") {
+      assert(filesWith(key) == Set("GraftSession.scala"))
     }
 }
